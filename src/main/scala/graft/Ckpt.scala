@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * memory is doing eviction/GC work that gets billed to whichever query
   * is executing. `sweep()` frees everything between queries, EXCEPT
   * checkpoints registered through `pinned()` — those back cross-query
-  * memo caches (Stratify's strata, Dedup's pair set) whose lineage is
+  * memo caches (Dedup's pair set, Graph's edge table) whose lineage is
   * truncated and therefore cannot be recomputed if their blocks vanish.
   */
 object Ckpt {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Cross-query memo cache keyed by (session, dataset dir) — the shared
-  * shape behind Dedup's pair cache and Stratify's strata cache.
+  * shape behind Dedup's pair cache and Graph's edge cache.
   *
   * A bare ConcurrentHashMap keyed by SparkSession is process-lifetime:
   * a JVM that creates and stops many sessions (test suites, notebook

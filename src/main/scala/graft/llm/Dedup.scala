@@ -706,7 +706,7 @@ object Dedup {
 
   /** Memoized q34 pair set per (session, dir): q105 builds its edge
     * list from the near-dup pairs without paying for them twice in one
-    * bench/verify run (same pattern as Stratify's strata cache).
+    * bench/verify run (same pattern as Graph's edge cache).
     * Dead-session entries are purged on access ([[graft.SessionCache]]). */
   private val pairCache =
     new graft.SessionCache[DataFrame](graft.Ckpt.free, "jaccard_pairs")

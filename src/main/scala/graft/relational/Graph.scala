@@ -36,7 +36,7 @@ object Graph {
     * edge derivation itself is the star-join the optimizer already
     * broadcasts. Two iterations keep the oracle finite; a production
     * run loops the same `step` to convergence (the fixpoint loop is
-    * `rounds.Stratify`'s pattern). */
+    * `Dedup.minLabelComponents`'s pattern). */
   def q140PageRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dec = DecimalType(18, 9)
@@ -203,9 +203,9 @@ object Graph {
   /** Cross-query memo of the thresholded co-visitation edge table
     * (r13): q155 and q161 derive the IDENTICAL edges from the identical
     * presence table — the same shared-intermediate shape as Dedup's
-    * pair cache (q34 feeding q105) and Stratify's strata, memoized the
-    * same way (SessionCache + Ckpt.pinned so the blocks survive the
-    * Bench/Verify between-query sweep). A production pipeline computing
+    * pair cache (q34 feeding q105), memoized the same way (SessionCache
+    * + Ckpt.pinned so the blocks survive the Bench/Verify between-query
+    * sweep). A production pipeline computing
     * both graph metrics shares the edge build; so do we — ~2.3 s of the
     * two queries' ~4 s each was this build, paid twice. */
   private val edgeCache =
@@ -268,7 +268,7 @@ object Graph {
     * d'(v) = min(d(v), min over in-edges (u,v) of d(u)+1 — the
     * distributed Bellman-Ford/BFS step, one edge join + one keyed min
     * per round, the exact shape a frontier-based engine runs to a
-    * fixpoint (`rounds.Stratify`'s loop). Distances stay in integer
+    * fixpoint (`Dedup.minLabelComponents`'s loop). Distances stay in integer
     * arithmetic with 999 as the not-yet-reached sentinel, so the whole
     * computation is oracle-restatable round by round. Output is the
     * hop histogram with min/Σ id checksums per level. */

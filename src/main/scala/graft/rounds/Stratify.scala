@@ -1,6 +1,6 @@
 package graft.rounds
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -11,75 +11,73 @@ import graft.Tables
   * dependency chain ending at it; every phase runs in the earliest
   * round its dependencies allow (maximality).
   *
-  * Implemented as an iterative DataFrame fixpoint: each iteration joins
-  * the current depth estimate across the dependency edges and takes
-  * `max(dep depth)+1`; terminates in ≤ depth(DAG) iterations. All work
-  * is distributed joins/aggregations keyed by (plan, phase) — the
-  * driver only counts iterations, so 10⁹ plans stratify exactly like
-  * 10: shuffle-partitioned by key, no driver-side data.
+  * Every dependency edge stays inside one plan, so each plan's DAG is
+  * stratified on its own: one shuffle groups a plan's phases and edges
+  * into a single row, and an in-memory longest-path fold in Kahn order
+  * assigns the rounds. Work is distributed by plan; the driver holds no
+  * data and runs no loop, so 10⁹ plans stratify exactly like 10. One
+  * plan's DAG must fit in one task's memory.
   *
-  * Cycle safety: edges are restricted to earlier→later phase numbers
+  * Cycle safety: q40 restricts edges to earlier→later phase numbers
   * (the reference's own tiebreak — oldest first, `agents/orbiter.md:
-  * 138-140` — applied at edge-derivation time), so the graph is acyclic
-  * by construction and the fixpoint always terminates.
+  * 138-140` — applied at edge-derivation time), so its graph is acyclic
+  * by construction. A caller's cyclic edge set fails loudly.
   */
 object Stratify {
 
   /** Stratify a generic edge list. `nodes`: (plan, phase); `edges`:
     * (plan, phase, dep) meaning `dep` must finish before `phase`.
-    * Returns (plan, phase, round) with round ≥ 1. */
-  def stratify(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val e = edges.transform(graft.Ckpt.cut) // reused every iteration
-    // depth starts at 1 for every node
-    var depth = nodes.select($"plan", $"phase", lit(1).as("round"))
-      .transform(graft.Ckpt.cut)
-    var changed = true
-    var i = 0
-    while (changed && i < maxIter) {
-      // proposed = 1 + max over deps' current depth
-      val proposed = e
-        .join(depth.withColumnRenamed("phase", "dep_phase")
-          .withColumnRenamed("round", "dep_round"),
-          Seq("plan"))
-        .filter($"dep" === $"dep_phase")
-        .groupBy($"plan", $"phase")
-        .agg((max($"dep_round") + 1).as("via_deps"))
-      // localCheckpoint truncates the growing lineage so per-iteration
-      // planning stays O(1) — at scale this is the standard iterative-
-      // algorithm pattern (same as GraphX/ALS checkpoint cadence)
-      val next = depth.join(proposed, Seq("plan", "phase"), "left")
-        .select($"plan", $"phase",
-          greatest($"round", coalesce($"via_deps", lit(1))).as("round"))
-        .transform(graft.Ckpt.cut)
-      val delta = next.join(depth.withColumnRenamed("round", "old"),
-        Seq("plan", "phase"))
-        .filter($"round" =!= $"old").limit(1).count()
-      changed = delta > 0
-      // free the superseded round's checkpoint blocks (see
-      // Dedup.minLabelComponents — k rounds must not hold k copies)
-      graft.Ckpt.free(depth)
-      depth = next
-      i += 1
-    }
-    graft.Ckpt.free(e)
-    // A DAG deeper than maxIter means the returned rounds are NOT a
-    // valid stratification — fail fast rather than hand the scheduler
-    // silently-wrong strata (same contract as bandBucket's dim guard:
-    // a structural assumption violation must error, not degrade).
-    if (changed)
-      throw new IllegalStateException(
-        s"stratify did not converge in $maxIter rounds — dependency " +
-        "chains deeper than maxIter; raise maxIter")
-    depth
+    * Returns (plan, phase, round) with round ≥ 1. Duplicate node or
+    * edge rows are harmless; an edge whose phase or dep is not a node
+    * of its plan is ignored. A plan whose edges contain a cycle fails
+    * the job with an `IllegalStateException` naming the plan. */
+  def stratify(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val rows = nodes.select(col("plan"), col("phase"), lit(null).as("dep"),
+        lit(true).as("node"))
+      .unionByName(edges.select(col("plan"), col("phase"), col("dep"),
+        lit(false).as("node")))
+    rows.groupBy(col("plan"))
+      .agg(collect_set(when(col("node"), struct(col("phase")))).as("phases"),
+        collect_set(when(!col("node"), struct(col("phase"), col("dep")))).as("deps"))
+      .select(col("plan"), explode(zip_with(col("phases"),
+          longestPath(col("plan").cast("string"), col("phases"), col("deps")),
+          (p, r) => struct(p.getField("phase").as("phase"), r.as("round"))))
+        .as("s"))
+      .select(col("plan"), col("s.phase"), col("s.round"))
   }
 
-  /** Memoized q40 result per (session, dir): q41 reuses q40's strata
-    * instead of re-running the fixpoint. Dead-session entries are
-    * purged on access (see [[graft.SessionCache]]). */
-  private val strataCache =
-    new graft.SessionCache[DataFrame](graft.Ckpt.free, "strata")
+  /** One plan's rounds, aligned with its distinct `phases`: the
+    * longest-path depth of each phase over the distinct `deps` (phase,
+    * dep) pairs, in Kahn order — iterative, so a deep chain never
+    * touches the stack. */
+  private val longestPath = udf { (plan: String, phases: Seq[Row], deps: Seq[Row]) =>
+    val n = phases.length
+    val at = phases.iterator.map(_.get(0)).zipWithIndex.toMap
+    val next = Array.fill(n)(List.empty[Int]) // dep -> the phases waiting on it
+    val waiting = new Array[Int](n)
+    for (e <- deps; i <- at.get(e.get(0)); j <- at.get(e.get(1))) {
+      next(j) ::= i
+      waiting(i) += 1
+    }
+    val round = Array.fill(n)(1)
+    var ready = (0 until n).filter(waiting(_) == 0).toList
+    var done = 0
+    while (ready.nonEmpty) {
+      val j = ready.head
+      ready = ready.tail
+      done += 1
+      for (i <- next(j)) {
+        round(i) = round(i) max (round(j) + 1)
+        waiting(i) -= 1
+        if (waiting(i) == 0) ready ::= i
+      }
+    }
+    if (done < n)
+      throw new IllegalStateException(
+        s"stratify: plan $plan has a dependency cycle; phases on or after it: " +
+        (0 until n).filter(waiting(_) > 0).map(phases(_).get(0)).mkString(", "))
+    round.toSeq
+  }
 
   /** q40: round stratification over a derived phase DAG from `lineitem`:
     * plan = order, phase = line number, and a dependency edge j→i when
@@ -88,31 +86,23 @@ object Stratify {
     * `agents/orbiter.md:55-66`). Output: per plan/phase its round, plus
     * plan-level parallelism stats mirror `parallelGroups`
     * (ref `commands/nova.md:488-489`). */
-  def q40RoundStrata(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    strataCache.getOrElseUpdate(s, dir, buildStrata(s, dir))
-      .orderBy($"plan", $"phase")
-  }
+  def q40RoundStrata(s: SparkSession, dir: String): DataFrame =
+    strata(s, dir).orderBy(col("plan"), col("phase"))
 
-  private def buildStrata(s: SparkSession, dir: String): DataFrame = {
+  private def strata(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir)
+    // (plan, phase) is not unique in the synthetic lineitem, so nodes
+    // and edges repeat: stratify dedups both
+    val a = Tables.lineitem(s, dir)
       .select($"l_orderkey".as("plan"), $"l_linenumber".as("phase"),
         $"l_partkey", $"l_suppkey")
-    // (plan, phase) is not unique in the synthetic lineitem — dedup to a
-    // proper DAG node set
-    val nodes = li.select($"plan", $"phase").distinct()
-    val a = li.select($"plan", $"phase", $"l_partkey", $"l_suppkey")
-    val b = li.select($"plan".as("p2"), $"phase".as("dep"),
+    val b = a.select($"plan".as("p2"), $"phase".as("dep"),
       $"l_partkey".as("pk2"), $"l_suppkey".as("sk2"))
     val edges = a.join(b,
         $"plan" === $"p2" && $"dep" < $"phase" &&
         ($"l_partkey" === $"pk2" || $"l_suppkey" === $"sk2"))
-      .select($"plan", $"phase", $"dep").distinct()
-    // pinned: the memoized strata survive Bench/Verify's between-query
-    // block sweep (the loop's per-iteration checkpoints do not, and
-    // should not — they are garbage once the fixpoint converges)
-    graft.Ckpt.pinned(stratify(nodes, edges))
+      .select($"plan", $"phase", $"dep")
+    stratify(a.select($"plan", $"phase"), edges)
   }
 
   val q40Sql: String =
@@ -138,8 +128,7 @@ object Stratify {
     * (ref `commands/nova.md:488-489`). */
   def q41RoundSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val strata = q40RoundStrata(s, dir)
-    val width = strata.groupBy($"plan", $"round").agg(count(lit(1)).as("w"))
+    val width = strata(s, dir).groupBy($"plan", $"round").agg(count(lit(1)).as("w"))
     width.groupBy($"plan")
       .agg(max($"round").as("parallel_groups"),
         max($"w").as("max_round_width"),

@@ -133,21 +133,29 @@ class StratifySpec extends AnyFunSuite {
     assert(out == Map(1 -> 1, 2 -> 1, 3 -> 2))
   }
 
-  test("stratify throws on non-convergence instead of silently capping") {
-    // a 12-deep chain cannot stratify in 5 rounds — wrong strata must
-    // never be returned silently (the pre-fix loop exited at the cap
-    // with `changed` still true and handed the scheduler bogus rounds)
-    val n = 12
+  test("stratify: a 5,000-phase chain yields rounds 1..5,000") {
+    val n = 5000
     val nodes = (1 to n).map(("p", _)).toDF("plan", "phase")
     val edges = (2 to n).map(i => ("p", i, i - 1)).toDF("plan", "phase", "dep")
-    val e = intercept[IllegalStateException] {
-      rounds.Stratify.stratify(nodes, edges, maxIter = 5).collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
-    // and with enough iterations the same input converges exactly
-    val out = rounds.Stratify.stratify(nodes, edges, maxIter = n + 1).collect()
+    val out = rounds.Stratify.stratify(nodes, edges).collect()
       .map(r => r.getInt(1) -> r.getInt(2)).toMap
     assert(out == (1 to n).map(i => i -> i).toMap)
+  }
+
+  test("stratify: a cyclic edge set fails loudly, naming the plan") {
+    // p2's 2 -> 3 -> 4 -> 2 cycle has no valid strata; acyclic p1 in the
+    // same call must not hide it
+    val nodes = Seq(("p1", 1), ("p1", 2), ("p2", 1), ("p2", 2), ("p2", 3),
+      ("p2", 4)).toDF("plan", "phase")
+    val edges = Seq(("p1", 2, 1), ("p2", 2, 1), ("p2", 3, 2), ("p2", 4, 3),
+      ("p2", 2, 4)).toDF("plan", "phase", "dep")
+    val e = intercept[Exception] {
+      rounds.Stratify.stratify(nodes, edges).collect()
+    }
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: IllegalStateException => c }
+    assert(cause.exists(_.getMessage.contains("plan p2 has a dependency cycle")),
+      s"no IllegalStateException naming p2 in $e")
   }
 
   test("stratify: chain of n phases gives n rounds") {
@@ -160,30 +168,59 @@ class StratifySpec extends AnyFunSuite {
   }
 
   /** Property: every phase's round is exactly 1 + max(dep rounds)
-    * (maximality + validity) on seeded random DAGs with edges i<j only. */
+    * (maximality + validity) on seeded random DAGs with edges i<j only.
+    * Each call stratifies several plans that reuse the same phase
+    * numbers with different edges (some with none), so a plan's rounds
+    * must come from its own edges alone. Duplicate rows ride along. */
   test("stratify property: round = 1 + max dep round on random DAGs") {
     val rnd = new scala.util.Random(42)
     (1 to 8).foreach { _ =>
-      val n = 2 + rnd.nextInt(7)
-      val es = (0 until rnd.nextInt(2 * n)).map { _ =>
-        val j = 2 + rnd.nextInt(n - 1); val i = 1 + rnd.nextInt(j - 1); (j, i)
-      }.distinct
-      val nodes = (1 to n).map(("p", _)).toDF("plan", "phase")
-      val out =
-        if (es.isEmpty) {
-          val edges = Seq.empty[(String, Int, Int)].toDF("plan", "phase", "dep")
-          rounds.Stratify.stratify(nodes, edges)
-        } else {
-          val edges = es.map { case (j, i) => ("p", j, i) }.toDF("plan", "phase", "dep")
-          rounds.Stratify.stratify(nodes, edges)
+      val dags = (1 to 4).map { k =>
+        val n = 2 + rnd.nextInt(7)
+        val es = (0 until rnd.nextInt(2 * n)).map { _ =>
+          val j = 2 + rnd.nextInt(n - 1); val i = 1 + rnd.nextInt(j - 1); (j, i)
+        }.distinct
+        s"p$k" -> (n, es)
+      }
+      val nodes = dags.flatMap { case (p, (n, _)) => (1 to n).map((p, _)) }
+      val edges = dags.flatMap { case (p, (_, es)) => es.map { case (j, i) => (p, j, i) } }
+      val out = rounds.Stratify.stratify((nodes ++ nodes.take(3)).toDF("plan", "phase"),
+        (edges ++ edges.take(3)).toDF("plan", "phase", "dep"))
+      val got = out.collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
+      assert(got.size == nodes.size)
+      dags.foreach { case (plan, (n, es)) =>
+        val depMap = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        (1 to n).foreach { p =>
+          val expect = depMap.get(p).map(ds => ds.map(d => got((plan, d))).max + 1).getOrElse(1)
+          assert(got((plan, p)) == expect,
+            s"$plan phase $p: got ${got((plan, p))}, want $expect (n=$n edges=$es)")
         }
-      val got = out.collect().map(r => r.getInt(1) -> r.getInt(2)).toMap
-      val depMap = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      (1 to n).foreach { p =>
-        val expect = depMap.get(p).map(ds => ds.map(got).max + 1).getOrElse(1)
-        assert(got(p) == expect, s"phase $p: got ${got(p)}, want $expect (n=$n edges=$es)")
       }
     }
+  }
+
+  test("q40 reads the current lineitem, not an earlier result for the same dir") {
+    val dir = java.nio.file.Files.createTempDirectory("strata_stale").toString
+    def write(lines: Seq[(Long, Int, Long, Long)]): Unit =
+      lines.toDF("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    def q40(): Map[(Long, Int), Int] = rounds.Stratify.q40RoundStrata(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
+    // order 1: line 2 shares line 1's part, line 3 shares line 2's supplier
+    write(Seq((1L, 1, 10L, 100L), (1L, 2, 10L, 200L), (1L, 3, 30L, 200L)))
+    assert(q40() == Map((1L, 1) -> 1, (1L, 2) -> 2, (1L, 3) -> 3))
+    // line 3 now shares nothing with line 2: one dependency gone
+    write(Seq((1L, 1, 10L, 100L), (1L, 2, 10L, 200L), (1L, 3, 30L, 300L)))
+    assert(q40() == Map((1L, 1) -> 1, (1L, 2) -> 2, (1L, 3) -> 1))
+  }
+
+  test("q40/q41 leave no persistent RDD behind without a sweep") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(rounds.Stratify.q40RoundStrata(spark, sf).collect().nonEmpty)
+    assert(rounds.Stratify.q41RoundSummary(spark, sf).collect().nonEmpty)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persistent RDDs left behind: $left")
   }
 
   test("q42 min/max-aggregation dependency sets equal the pair-join replay") {
