@@ -39,7 +39,6 @@ object SparkEntry {
     queue.Derived.queries ++
     streaming.Registered.queries ++
     llm.Dedup.queries ++
-    queue.TranscriptEtl.queries ++
     llm.Multimodal.queries ++
     llm.Corpus.queries ++
     plans.TopK.queries ++

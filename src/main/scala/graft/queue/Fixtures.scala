@@ -6,8 +6,10 @@ import graft.model._
 
 /** Literal fixture rows replicating the reference's record shapes
   * (FIXTURES.md §B; schema authorities: `commands/nova.md:290-373,473-491`,
-  * `commands/pulsar.md:192-201,335-345`). Used by unit tests and by the
-  * rows-only registered queries q42/q43.
+  * `commands/pulsar.md:192-201,335-345`). Used by the unit tests and by
+  * `QueueOps.fixtureSchedulerPick`; no registered query reads them (the
+  * driver-graded queries run over the parquet-derived tables in
+  * [[Derived]]).
   */
 object Fixtures {
 

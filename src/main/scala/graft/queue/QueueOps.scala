@@ -179,15 +179,6 @@ object QueueOps {
     pickNext(prio).select("id", "project", "planType", "priority")
   }
 
-  /** Status overview + ETA on the fixture status table (S18/S19);
-    * driver-graded twin: [[Derived.q43StatusOverview]]. */
-  def fixtureStatusOverview(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val st = Fixtures.statuses(s)
-    statusOverview(st).join(etaSeconds(st), Seq("plan_id"), "left")
-      .orderBy($"plan_id")
-  }
-
   /** S21 — namespace FK resolution: board entries whose recorded
     * projectPath no longer matches the config table get re-pointed
     * (rename detection — ref `scripts/resolve-namespace.sh:17-70`). */

@@ -73,17 +73,6 @@ object TranscriptEtl {
     ).toDF("id", "transcript")
   }
 
-  /** The ETL over fixture transcripts — regex semantics unit-tested in
-    * EtlSpec; driver-graded twin: [[Derived.q50TranscriptEtl]]. */
-  def fixtureTranscriptEtl(s: SparkSession): DataFrame = {
-    import s.implicits._
-    parse(fixture(s))
-      .select($"id", $"status", $"tests_passed", $"tests_failed",
-        concat_ws(",", $"files_modified").as("files"),
-        concat_ws(",", $"commits").as("commit_hashes"))
-      .orderBy($"id")
-  }
-
   /** S10 — cost-based model routing (ref `commands/pulsar.md:114-137`,
     * `commands/nova.md:205-252`): complexity → executor class, default
     * light when the column is missing/unknown. */
@@ -95,20 +84,4 @@ object TranscriptEtl {
         .when($"complexity" === "Medium", "heavy")
         .otherwise("light"))
   }
-
-  /** Routing over the fixture plans' phases, with per-executor totals
-    * (the execution-log model aggregate, ref `commands/pulsar.md:
-    * 635-638`). Driver-graded twin: [[Derived.q51ModelRouting]]. */
-  def fixtureModelRouting(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val phases = Fixtures.plans(s)
-      .select($"id".as("plan_id"), explode($"phases").as("ph"))
-      .select($"plan_id", $"ph.n".as("phase"), $"ph.complexity")
-    routeModels(phases)
-      .groupBy($"executor")
-      .agg(count(lit(1)).as("n_phases"))
-      .orderBy($"executor")
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 }

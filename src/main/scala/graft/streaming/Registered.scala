@@ -1,32 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.queue.Fixtures
 
-/** Rows-only registered queries for the streaming domain: the driver
-  * can't oracle stateful streaming, so these run the batch-replay form
-  * over fixture event logs; the true streaming paths are covered by
-  * StreamingSpec (MemoryStream + processAllAvailable). */
+/** Rows-only registered queries for the streaming domain. The driver
+  * can't oracle stateful streaming: the lifecycle replay and pulse it
+  * grades run over parquet-derived event logs in `graft.queue.Derived`
+  * (q44/q45), and the true streaming paths are covered by StreamingSpec
+  * (MemoryStream + processAllAvailable). */
 object Registered {
-
-  /** Event-sourced lifecycle replay (S12–S14) over the fixture log —
-    * covered by StreamingSpec; the driver-graded twin runs over a
-    * parquet-derived event log in `graft.queue.Derived.q44LifecycleReplay`. */
-  def fixtureLifecycleReplay(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Lifecycle.replayBatch(Fixtures.toolEvents(s)).toDF()
-      .orderBy($"plan_id", $"phase")
-  }
-
-  /** Pulse rollup (S16) over the replayed fixture statuses — covered by
-    * StreamingSpec; the driver-graded twin runs over parquet-derived
-    * statuses in `graft.queue.Derived.q45Pulse`. */
-  def fixturePulse(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Streams.pulse(Lifecycle.replayBatch(Fixtures.toolEvents(s)))
-      .orderBy($"project", $"plan_id")
-  }
 
   /** q55: session capability probe (S27). */
   def q55Capabilities(s: SparkSession, dir: String): DataFrame =

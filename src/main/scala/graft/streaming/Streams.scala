@@ -157,17 +157,19 @@ object Streams {
   case class TransState(lastTu: Long, lastId: Long, lastType: String)
   case class Transition(src: String, dst: String)
 
-  /** The pure per-key transition fold, shared by the fMGWS form below
-    * and the transformWithState twin ([[TransitionsV2]]) — one
-    * transition function, two state APIs (the `Lifecycle.step`
-    * precedent). Returns (final state, emitted pairs). */
+  /** The pure per-key transition fold behind [[transitionPairs]].
+    * Returns (final state, emitted pairs). Sort key, gap test and the
+    * stored `lastTu` are all microseconds ([[TemporalJoin.us]]), the
+    * precision q180's batch derivation orders and splits sessions at:
+    * `getTime` millis would order two events in one millisecond by id
+    * and pair a 30 min + 800 µs gap that q180 breaks. */
   private[streaming] def foldTransitions(
       evs: Seq[TransEvent], init: Option[TransState],
       gapUs: Long): (Option[TransState], Seq[Transition]) = {
     var last = init
     val out = Seq.newBuilder[Transition]
-    evs.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val tu = e.ts.getTime * 1000L
+    evs.sortBy(e => (TemporalJoin.us(e.ts), e.event_id)).foreach { e =>
+      val tu = TemporalJoin.us(e.ts)
       last match {
         case Some(st) if tu < st.lastTu =>
           // out-of-order cross-batch arrival: keep the newer state,
@@ -205,8 +207,7 @@ object Streams {
     * violations yield no output instead of wrong output (ADVICE r10).
     * StreamingSpec replays a two-batch feed and pins equality with the
     * batch q180 counts on identical data, plus the out-of-order drop.
-    * The fold itself lives in [[foldTransitions]], shared with the
-    * transformWithState twin ([[TransitionsV2]]). */
+    * The fold itself is the pure [[foldTransitions]]. */
   def transitionPairs(events: Dataset[TransEvent],
       gapMinutes: Int = 30): Dataset[Transition] = {
     import events.sparkSession.implicits._

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import graft.model.ToolEvent
 
-/** Per-phase tool telemetry on `transformWithState`, covering the two
-  * remaining typed-state shapes next to LifecycleV2's ValueState:
+/** Per-phase tool telemetry on `transformWithState`, with two typed-state
+  * shapes:
   *
   *  - ListState: the last `HistoryCap` tool names, oldest-first — the
   *    `last_tool` record generalized to a bounded history (ref

@@ -35,6 +35,13 @@ class QueueSpec extends AnyFunSuite {
     assert(picked.head.getString(2) == "bug")
   }
 
+  test("S1/S2 queue counts: queued plans per project and execution mode") {
+    val got = QueueOps.queueCounts(Fixtures.plans(spark)).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(got == Seq(("alpha", "background", 2L), ("beta", "interactive", 1L)),
+      s"got $got")
+  }
+
   test("S3 active-existence gate") {
     assert(QueueOps.anyActive(Fixtures.plans(spark)))
     val none = Fixtures.plans(spark).filter(col("status") =!= "active")

@@ -32,7 +32,6 @@ class RegistrySpec extends AnyFunSuite {
       "queue.Derived"        -> queue.Derived.queries.keySet,
       "streaming.Registered" -> streaming.Registered.queries.keySet,
       "llm.Dedup"            -> llm.Dedup.queries.keySet,
-      "queue.TranscriptEtl"  -> queue.TranscriptEtl.queries.keySet,
       "llm.Multimodal"       -> llm.Multimodal.queries.keySet,
       "llm.Corpus"           -> llm.Corpus.queries.keySet,
       "plans.TopK"           -> plans.TopK.queries.keySet,

@@ -28,9 +28,11 @@ class StreamingSpec extends AnyFunSuite {
         ToolEvent("p", 1, "proj", "Bash", None, "tool", ts("2026-01-01 10:02:00")),
         ToolEvent("p", 2, "proj", "Session", None, "start", ts("2026-01-01 10:00:30")))
       q.processAllAvailable()
-      // batch 2: phase 1 completes; a late steal attempt on phase 2
+      // batch 2: phase 1 completes, then a late tool event arrives on
+      // it; a late steal attempt on phase 2
       mem.addData(
         ToolEvent("p", 1, "proj", "", None, "stop_completed", ts("2026-01-01 10:03:00")),
+        ToolEvent("p", 1, "proj", "Write", Some("b.ts"), "tool", ts("2026-01-01 10:04:00")),
         ToolEvent("p", 2, "proj", "Session", None, "start", ts("2026-01-01 10:03:10")))
       q.processAllAvailable()
       // batch 3: unrelated phase far in the future pushes the watermark
@@ -56,7 +58,78 @@ class StreamingSpec extends AnyFunSuite {
       val p1Statuses = rows.filter($"phase" === 1).select("status")
         .collect().map(_.getString(0)).toSet
       assert(!p1Statuses.contains("failed"))
+      val p1Late = rows.filter($"phase" === 1 &&
+        ($"tool_count" > 2 || $"last_tool" === "Write" ||
+          $"updated_at" === lit(ts("2026-01-01 10:04:00")))).count()
+      assert(p1Late == 0, s"$p1Late phase-1 rows show the late tool event")
     } finally q.stop()
+  }
+
+  /** The reference daemon survives restarts (`scripts/starry-daemon.sh:
+    * 209-226`): killing the process must lose NO lifecycle state. Here:
+    * run the machine over a file source with a checkpoint, stop the
+    * query mid-history, start a NEW query on the same checkpoint, and
+    * assert claims (started_at), tool counters, and the stall timer
+    * registered BEFORE the kill all resume exactly. */
+  test("lifecycle machine recovers claims, counters and stall timers from a checkpoint") {
+    import java.nio.file.Files
+    val inDir = Files.createTempDirectory("lc_in").toFile
+    val ckpt = Files.createTempDirectory("lc_ckpt").toFile
+    def writeFile(name: String, events: Seq[ToolEvent]): Unit = {
+      val json = events.toDS().toJSON.collect().mkString("\n")
+      Files.writeString(new java.io.File(inDir, name).toPath, json)
+    }
+    val src = spark.readStream
+      .schema(implicitly[org.apache.spark.sql.Encoder[ToolEvent]].schema)
+      .option("maxFilesPerTrigger", "1")
+      .json(inDir.getAbsolutePath)
+      .as[ToolEvent]
+    val out = Lifecycle.statusStream(src, watermarkDelay = "0 seconds")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[PhaseStatus]()
+    def start() = out.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[PhaseStatus], _: Long) =>
+        batch.collect().foreach(seen.add)
+      }
+      .start()
+
+    // run 1: phase 1 claimed + one tool; phase 2 claimed, then KILL
+    writeFile("f1.json", Seq(
+      ToolEvent("p", 1, "proj", "Session", None, "start", ts("2026-01-01 10:00:00")),
+      ToolEvent("p", 1, "proj", "Edit", Some("a.ts"), "tool", ts("2026-01-01 10:01:00")),
+      ToolEvent("p", 2, "proj", "Session", None, "start", ts("2026-01-01 10:00:30"))))
+    val q1 = start()
+    q1.processAllAvailable()
+    q1.stop()
+    val afterRun1 = seen.toArray(Array.empty[PhaseStatus])
+    assert(afterRun1.exists(s => s.phase == 1 && s.tool_count == 1))
+    seen.clear()
+
+    // run 2, same checkpoint: phase 1 continues (+1 tool, completes);
+    // phase 3 events push the watermark past phase 2's pre-kill stall
+    // deadline (10:00:30 + 10 min)
+    writeFile("f2.json", Seq(
+      ToolEvent("p", 1, "proj", "Bash", None, "tool", ts("2026-01-01 10:05:00")),
+      ToolEvent("p", 1, "proj", "", None, "stop_completed", ts("2026-01-01 10:06:00")),
+      ToolEvent("p", 3, "proj", "Session", None, "start", ts("2026-01-01 10:30:00"))))
+    writeFile("f3.json", Seq(
+      ToolEvent("p", 3, "proj", "Bash", None, "tool", ts("2026-01-01 10:31:00"))))
+    val q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+    val afterRun2 = seen.toArray(Array.empty[PhaseStatus])
+
+    val p1 = afterRun2.filter(_.phase == 1).maxBy(_.updated_at.getTime)
+    // counter CONTINUED from the checkpointed 1 -> 2, not restarted
+    assert(p1.tool_count == 2, s"tool_count ${p1.tool_count}, expected 2")
+    assert(p1.status == "completed")
+    // the claim (started_at) survived the restart unchanged
+    assert(p1.started_at == ts("2026-01-01 10:00:00"))
+    assert(p1.completed_at.contains(ts("2026-01-01 10:06:00")))
+    // the stall timer registered before the kill fired after it
+    val p2Statuses = afterRun2.filter(_.phase == 2).map(_.status).toSet
+    assert(p2Statuses.contains("stalled"), s"phase2 post-restart: $p2Statuses")
   }
 
   test("batch replay orders events at microsecond precision") {
@@ -1286,9 +1359,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** The whole daemon loop of `scripts/starry-daemon.sh:171-226` as ONE
-    * checkpointed chain (VERDICT r10 #6 — LifecycleV2Spec proves
-    * recovery per-operator; this replays the reference's §3.3 lifecycle
-    * END-TO-END): queued plan docs → [[Streams.queueStream]] single-
+    * checkpointed chain (the checkpoint-recovery test above covers the
+    * lifecycle operator alone; this replays the reference's §3.3
+    * lifecycle END-TO-END): queued plan docs → [[Streams.queueStream]] single-
     * flight admission (maxFilesPerTrigger=1) → the "executor" emits each
     * admitted plan's tool events (pulsar-auto.sh stand-in, idempotent by
     * filename) → [[Lifecycle.statusStream]] folds them into statuses →
@@ -1436,5 +1509,46 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Map(("view", "click") -> 1L, ("click", "purchase") -> 1L),
         s"got $got")
     } finally q.stop()
+  }
+
+  /** Feeds one batch of events through [[Streams.transitionCounts]] and
+    * returns the (src, dst) -> n matrix. */
+  private def transitionMatrix(name: String,
+      evs: Seq[Streams.TransEvent]): Map[(String, String), Long] = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Streams.TransEvent]
+    val q = Streams.transitionCounts(mem.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("complete").start()
+    try {
+      mem.addData(evs: _*)
+      q.processAllAvailable()
+      spark.table(name).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    } finally q.stop()
+  }
+
+  private def atMicros(s: String, micros: Int): Timestamp = {
+    val t = ts(s); t.setNanos(micros * 1000); t
+  }
+
+  test("transition pairs order events within one millisecond by time, not by id") {
+    // q180 orders by (ts, event_id) at microsecond precision: the view
+    // at .000100 precedes the click at .000900 although its id is larger
+    val got = transitionMatrix("trans_sub_ms_order", Seq(
+      Streams.TransEvent(1L, 1L, atMicros("2026-01-01 10:00:00", 900), "click"),
+      Streams.TransEvent(1L, 2L, atMicros("2026-01-01 10:00:00", 100), "view")))
+    assert(got == Map(("view", "click") -> 1L), s"got $got")
+  }
+
+  test("transition pairs break the session on a gap 800 µs past 30 minutes") {
+    // 10:00:00.000100 -> 10:30:00.000900 is 30 min + 800 µs: q180 starts
+    // a new session (gap > 30 min in micros), so no view -> click pair;
+    // the click -> purchase 10 min later still pairs
+    val got = transitionMatrix("trans_sub_ms_gap", Seq(
+      Streams.TransEvent(1L, 1L, atMicros("2026-01-01 10:00:00", 100), "view"),
+      Streams.TransEvent(1L, 2L, atMicros("2026-01-01 10:30:00", 900), "click"),
+      Streams.TransEvent(1L, 3L, ts("2026-01-01 10:40:00"), "purchase")))
+    assert(got == Map(("click", "purchase") -> 1L), s"got $got")
   }
 }

@@ -5,7 +5,8 @@ Modes:
   gen         — write STATUS.md (per-query correctness + bench deltas)
                 from the newest CORRECTNESS_r*.json / BENCH_r*.json
   check-coverage — verify every "qNN ◆ / qNN ○" marker in COVERAGE.md
-                against the correctness artifact; exit 1 on drift
+                against the correctness artifact, and that every cited
+                `…Spec` is a `class …Spec` under src/test; exit 1 on drift
   bench-gate NEW [REF] — fail (exit 1) if any query regresses > 1.5x
                 vs the reference bench among queries >= 1s either side
 
@@ -540,6 +541,18 @@ def cmd_gen(args):
     open(out, "w").write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(corr)} queries)")
 
+def dangling_specs(text, test_root):
+    """Spec names `text` cites that no `class …Spec` under test_root
+    defines, sorted."""
+    defined = set()
+    for d, _, files in os.walk(test_root):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f)) as fh:
+                    defined.update(re.findall(r"\bclass\s+(\w+Spec)\b", fh.read()))
+    cited = set(re.findall(r"\b([A-Z]\w*Spec)\b", text))
+    return sorted(cited - defined)
+
 def cmd_check_coverage(args):
     cpath = arg_opt(args, "--correctness") or newest("CORRECTNESS_r*.json")
     corr = load_correctness(cpath)
@@ -561,6 +574,8 @@ def cmd_check_coverage(args):
             bad.append(f"q{num} claims ◆ but {name} is {v}")
         if marker == "○" and v != "rows-only":
             bad.append(f"q{num} claims ○ but {name} is {v}")
+    for spec in dangling_specs(text, os.path.join(ROOT, "src", "test")):
+        bad.append(f"{spec}: cited, but no class {spec} under src/test")
     if bad:
         print(f"COVERAGE.md drift vs {os.path.basename(cpath)}:")
         for b in sorted(set(bad)):

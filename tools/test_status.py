@@ -14,7 +14,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 from status import (spread_advisories, burst_window, load_bench_spread,
                     load_bench_box, box_drift_note, probe_norm_ratio,
-                    cmd_bench_gate)  # noqa: E402
+                    cmd_bench_gate, dangling_specs)  # noqa: E402
 
 
 def main():
@@ -376,6 +376,27 @@ def main():
     assert "probe-normalized" in out.getvalue(), out.getvalue()
     os.unlink(gref); os.unlink(gnew)
 
+    # --- check-coverage: every cited spec must be a test class --------
+    troot = tempfile.mkdtemp()
+    os.makedirs(os.path.join(troot, "graft"))
+    with open(os.path.join(troot, "graft", "ASpec.scala"), "w") as f:
+        f.write("package graft\nclass QueueSpec extends AnyFunSuite\n"
+                "class StratifySpec extends AnyFunSuite\n"
+                "class StreamingSpec extends AnyFunSuite\n")
+    ok_text = "| S5 | ... | QueueSpec \"S5\" |\n| S9 | ... | StratifySpec |\n"
+    assert dangling_specs(ok_text, troot) == [], dangling_specs(ok_text, troot)
+    gone = ok_text + "| stateful | ... | StreamingSpec, LifecycleV2Spec |\n"
+    assert dangling_specs(gone, troot) == ["LifecycleV2Spec"], \
+        dangling_specs(gone, troot)
+    import shutil
+    shutil.rmtree(troot)
+    # the committed COVERAGE.md cites only specs that exist
+    root_ = os.path.dirname(HERE)
+    with open(os.path.join(root_, "COVERAGE.md")) as f:
+        cov = f.read()
+    assert dangling_specs(cov, os.path.join(root_, "src", "test")) == [], \
+        dangling_specs(cov, os.path.join(root_, "src", "test"))
+
     # --- STATUS.md freshness pin (VERDICT r16 item 6) -----------------
     # The committed STATUS.md must never describe a superseded bench
     # record: the bench source named on its Sources line must be from
@@ -401,6 +422,7 @@ def main():
     print("test_status: OK (spread advisory fires once, suppressions hold; "
           "burst window named from rep provenance + truncation guard; "
           "reps field round-trips; box drift adjudicated from probes; "
+          "dangling spec citations caught; "
           "STATUS.md bench source is not superseded)")
 
 
