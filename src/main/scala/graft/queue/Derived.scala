@@ -7,8 +7,8 @@ import graft.model.{PhaseStatus, ToolEvent}
 
 /** Parquet-derived twins of the queue domain, so the reference's core
   * scheduler semantics are graded by the DuckDB hash oracle instead of
-  * rows-only (the fixture tables in [[Fixtures]] live in memory where
-  * the oracle can't see them — same trick as `rounds.Stratify`, which
+  * rows-only (the unit tests' fixture tables live in memory where the
+  * oracle can't see them — same trick as `rounds.Stratify`, which
   * derives the phase DAG from `lineitem`).
   *
   * Deterministic mapping (both engines compute it from the same
@@ -244,48 +244,10 @@ object Derived {
       |       CAST(least(greatest(raw, 1), 5) AS INT) AS priority
       |FROM prio ORDER BY priority, created_at, id LIMIT 1""".stripMargin
 
-  /** q43 — status overview + ETA (S18/S19) over the derived status
-    * table, through the production operators. */
-  def q43StatusOverview(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // both the overview and the ETA rollup scan the derived status
-    // table — materialize the join once
-    // eager localCheckpoint, NOT .persist(): lazy persist lets the
-    // overview and ETA subtrees race and duplicate the statuses compute,
-    // and even persist+count pays the columnar cache encode (~1.5x both,
-    // measured at sf0.1); raw-row checkpoint blocks are freed by the
-    // Ckpt.sweep Bench/Verify run after every query.
-    // Prune BEFORE the checkpoint (r13): a checkpoint is a barrier
-    // Catalyst cannot prune columns through, so the pre-r13 form
-    // materialized all 12 PhaseStatus fields — including the task_id/
-    // last_file concat strings no rollup reads — and the 10x decade
-    // point paid for it (17.4 s, memory-pressure regime). Materialized:
-    // the 7 columns the overview + ETA read, plus `phase` — unread by
-    // the rollups but a non-nullable Int in PhaseStatus, so a typed
-    // null restore would NPE if anything ever decodes the record. The
-    // pruned STRING fields come back as typed nulls so the PRODUCTION
-    // operators still run against the full PhaseStatus record.
-    // Optimization r20: the checkpoint is read TWICE now, not three
-    // times — etaSeconds collapsed its two aggregations into one pass
-    // (see QueueOps.etaSeconds). A repartition-to-width before the cut
-    // was ALSO measured (the blocks sit in the scan's 3 row-group
-    // partitions, so the rollup reads run 3-wide): solo 1.97 → 2.30 s
-    // WORSE — the extra 95 MB shuffle costs more than the narrow reads
-    // save — so the 3-partition layout stays (a 100 TB table arrives in
-    // thousands of splits and never hits this).
-    val st = statuses(s, dir)
-      .select($"project", $"plan_id", $"phase", $"status", $"tool_count",
-        $"updated_at", $"started_at", $"completed_at")
-      .transform(graft.Ckpt.cut)
-      .withColumn("task_id", lit(null).cast("string"))
-      .withColumn("thread_id", lit(null).cast("string"))
-      .withColumn("last_tool", lit(null).cast("string"))
-      .withColumn("last_file", lit(null).cast("string"))
-      .as[graft.model.PhaseStatus]
-    QueueOps.statusOverview(st)
-      .join(QueueOps.etaSeconds(st), Seq("plan_id"), "left")
-      .orderBy($"project", $"plan_id")
-  }
+  /** q43 — status overview with ETA (S18/S19) over the derived status
+    * table, through the production `QueueOps.statusOverview`. */
+  def q43StatusOverview(s: SparkSession, dir: String): DataFrame =
+    QueueOps.statusOverview(statuses(s, dir))
 
   val q43Sql: String =
     s"""WITH $statusesCte,
@@ -301,24 +263,23 @@ object Derived {
       |      AS pct_complete
       |  FROM statuses GROUP BY project, plan_id),
       |eta AS (
-      |  SELECT s.plan_id,
+      |  SELECT s.project, s.plan_id,
       |    CAST(sum(CASE WHEN status <> 'completed' THEN 1 ELSE 0 END) AS BIGINT) AS n_remaining,
       |    round(coalesce(avg(CASE WHEN status = 'completed' AND completed_at IS NOT NULL
       |          THEN (epoch_us(completed_at) - epoch_us(started_at)) / 1000000.0 END), 0.0)
       |      * sum(CASE WHEN status <> 'completed' THEN 1 ELSE 0 END), 1) AS eta_sec
-      |  FROM statuses s GROUP BY s.plan_id)
+      |  FROM statuses s GROUP BY s.project, s.plan_id)
       |SELECT o.project, o.plan_id, o.n_phases, o.n_completed, o.n_failed,
       |       o.n_running, o.total_tools, o.last_update, o.pct_complete,
       |       e.n_remaining, e.eta_sec
-      |FROM ov o LEFT JOIN eta e ON e.plan_id = o.plan_id
+      |FROM ov o LEFT JOIN eta e ON e.project = o.project AND e.plan_id = o.plan_id
       |ORDER BY o.project, o.plan_id""".stripMargin
 
   /** q45 — pulse rollup (S16) over the derived status table, through
-    * the production `Streams.pulse`. */
+    * the production `QueueOps.pulse`. */
   def q45Pulse(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.streaming.Streams.pulse(statuses(s, dir))
-      .orderBy($"project", $"plan_id")
+    QueueOps.pulse(statuses(s, dir)).orderBy($"project", $"plan_id")
   }
 
   val q45Sql: String =

@@ -1,12 +1,12 @@
 package graft.queue
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model._
 
 /** Batch queue analytics over the typed plan model — the reference's
-  * scheduler surface S1–S8 and rollups S18–S21 (SURVEY.md §2.1),
+  * scheduler surface S1–S8 and rollups S16 and S18–S21 (SURVEY.md §2.1),
   * restated as DataFrame transforms over `Dataset[Plan]`.
   *
   * Scale: every operator is keyed by plan/project and expressed as
@@ -105,48 +105,62 @@ object QueueOps {
     prioritized.orderBy($"priority".asc, $"createdAt".asc, $"id".asc).limit(1)
   }
 
-  /** S18 — status overview: per-plan rollup of phase statuses with
-    * percent complete (ref `commands/pulse.md:27-61`,
-    * `commands/pulsar-status.md:40-128`). */
-  def statusOverview(statuses: Dataset[PhaseStatus]): DataFrame = {
+  /** The per-(project, plan) status rollup behind S16, S18 and S19 (ref
+    * `commands/pulse.md:27-61`, `commands/pulsar-status.md:40-128`):
+    * one aggregation computes every column the pulse, the overview and
+    * the ETA read. [[pulse]] and [[statusOverview]] project it, and
+    * Catalyst's column pruning drops the aggregates a projection does
+    * not read, so each runs only its own. `avg` ignores NULLs, so
+    * `avg_dur` is the mean duration of completed phases that carry a
+    * completion time (NULL when there are none). */
+  private def statusRollup(statuses: Dataset[PhaseStatus]): DataFrame = {
     val s = statuses.sparkSession
     import s.implicits._
+    def n(c: Column): Column = sum(when(c, 1).otherwise(0))
+    val dur = (unix_micros($"completed_at".cast("timestamp")) -
+      unix_micros($"started_at".cast("timestamp"))) / 1000000.0
     statuses.groupBy($"project", $"plan_id")
       .agg(
         count(lit(1)).as("n_phases"),
-        sum(when($"status" === "completed", 1).otherwise(0)).as("n_completed"),
-        sum(when($"status" === "failed", 1).otherwise(0)).as("n_failed"),
-        sum(when($"status" === "running", 1).otherwise(0)).as("n_running"),
+        n($"status" === "completed").as("n_completed"),
+        n($"status" === "failed").as("n_failed"),
+        n($"status" === "running").as("n_running"),
+        n($"status" === "running" || $"status" === "starting").as("n_active"),
+        n($"status" === "stalled").as("n_stalled"),
+        n($"status" =!= "completed").as("n_remaining"),
         sum($"tool_count").as("total_tools"),
-        max($"updated_at").as("last_update"))
-      .withColumn("pct_complete",
-        round($"n_completed" * 100.0 / $"n_phases", 1))
-      .orderBy($"project", $"plan_id")
-  }
-
-  /** S19 — ETA: mean duration of completed phases × remaining count
-    * (ref `commands/pulsar-status.md:87`). */
-  def etaSeconds(statuses: Dataset[PhaseStatus]): DataFrame = {
-    val s = statuses.sparkSession
-    import s.implicits._
-    // ONE pass since r20 (guide §2.4): the old form scanned the status
-    // table twice — a filtered avg-duration aggregate joined back to a
-    // remaining-count aggregate — which on q43's 95 MB checkpointed
-    // frame was two of its three full block reads. `avg` ignores NULLs,
-    // so avg(when(completed-with-timestamp, dur)) IS the filtered
-    // average (empty group → NULL → the same coalesce(0.0)), and the
-    // remaining count rides the same hash aggregation. Identical
-    // output, half the reads; pinned by QueueSpec + the q43 oracle.
-    val dur = (unix_micros($"completed_at".cast("timestamp")) -
-      unix_micros($"started_at".cast("timestamp"))) / 1000000.0
-    statuses.groupBy($"plan_id")
-      .agg(
-        sum(when($"status" =!= "completed", 1).otherwise(0)).as("n_remaining"),
+        max($"updated_at").as("last_update"),
         avg(when($"status" === "completed" && $"completed_at".isNotNull, dur))
           .as("avg_dur"))
-      .select($"plan_id", $"n_remaining",
+  }
+
+  /** S16 — pulse: phases by status, total tools, last update and
+    * stalled count per (project, plan) (ref `agents/orbiter.md:198-242`).
+    * Works on batch or streaming status Datasets (complete output mode
+    * when streaming). */
+  def pulse(statuses: Dataset[PhaseStatus]): DataFrame = {
+    val s = statuses.sparkSession
+    import s.implicits._
+    statusRollup(statuses).select($"project", $"plan_id", $"n_phases",
+      $"n_completed", $"n_failed", $"n_active", $"n_stalled",
+      $"total_tools", $"last_update")
+  }
+
+  /** S18 + S19 — status overview with percent complete and ETA: mean
+    * duration of the plan's completed phases × its remaining count
+    * (ref `commands/pulsar-status.md:87`). ETA is per (project, plan),
+    * since plan ids are scoped per project. The columns keep q43's
+    * published order, `plan_id` first. */
+  def statusOverview(statuses: Dataset[PhaseStatus]): DataFrame = {
+    val s = statuses.sparkSession
+    import s.implicits._
+    statusRollup(statuses).select($"plan_id", $"project", $"n_phases",
+        $"n_completed", $"n_failed", $"n_running", $"total_tools",
+        $"last_update",
+        round($"n_completed" * 100.0 / $"n_phases", 1).as("pct_complete"),
+        $"n_remaining",
         round(coalesce($"avg_dur", lit(0.0)) * $"n_remaining", 1).as("eta_sec"))
-      .orderBy($"plan_id")
+      .orderBy($"project", $"plan_id")
   }
 
   /** S20 — lifecycle transition legality (ref `commands/pulsar.md:
@@ -165,18 +179,6 @@ object QueueOps {
     moves.join(legal, $"from_status" === $"from_ok" && $"to_status" === $"to_ok", "left")
       .withColumn("legal", $"from_ok".isNotNull)
       .drop("from_ok", "to_ok")
-  }
-
-  /** The scheduler pipeline end-to-end on the reference-shaped fixture
-    * queue: S5 dependency detection → S6 eligibility → S7 priority →
-    * S8 top-1 pick. Exercised by QueueSpec; the driver-graded twin runs
-    * over parquet-derived tables in [[Derived.q42SchedulerPick]]. */
-  def fixtureSchedulerPick(s: SparkSession): DataFrame = {
-    val plans = Fixtures.plans(s)
-    val deps = interPlanDeps(plans)
-    val elig = eligible(plans, deps)
-    val prio = withPriority(elig, deps, Timestamp.valueOf("2026-01-10 00:00:00"))
-    pickNext(prio).select("id", "project", "planType", "priority")
   }
 
   /** S21 — namespace FK resolution: board entries whose recorded

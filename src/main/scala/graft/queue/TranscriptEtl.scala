@@ -1,6 +1,6 @@
 package graft.queue
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S24 — transcript → structured report ETL (ref `agents/
@@ -50,27 +50,6 @@ object TranscriptEtl {
       .withColumn("report", to_json(struct(
         $"status", $"tests_passed", $"tests_failed",
         $"files_modified", $"commits")))
-  }
-
-  /** Fixture transcripts mirroring the reference's raw-CLI examples. */
-  def fixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      (1L,
-        """Phase 1 starting.
-          |Created src/models/user.ts
-          |Modified src/api/auth.ts
-          |Running tests... 12 passed, 0 failed
-          |Committed [a1b2c3d] feat: add user model""".stripMargin),
-      (2L,
-        """Phase 2 starting.
-          |Error: TypeError: cannot read property 'id'
-          |Updated src/app.ts
-          |3 passed, 2 failed
-          |retrying...""".stripMargin),
-      (3L,
-        """Phase 3: fatal: repository corrupt, cannot continue""".stripMargin)
-    ).toDF("id", "transcript")
   }
 
   /** S10 — cost-based model routing (ref `commands/pulsar.md:114-137`,

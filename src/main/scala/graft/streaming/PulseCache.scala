@@ -9,11 +9,13 @@ import graft.model.PhaseStatus
   * This is the reference's only materialized-view semantics: a cached
   * result with a freshness contract, not a live view.
   *
-  * Implementation: the rolled-up DataFrame is persisted on first
-  * compute (so reuse is a cache read, not a re-aggregation) and
-  * invalidated when the TTL lapses — the stale copy is unpersisted to
-  * release executor memory. The clock is injectable so the stale/fresh
-  * branches are unit-testable without sleeping.
+  * Implementation: the rolled-up DataFrame ([[TtlCache.pulse]] caches
+  * `queue.QueueOps.pulse`) is persisted on first compute (so reuse is
+  * a cache read, not a re-aggregation) and invalidated when the TTL
+  * lapses — the stale copy is unpersisted to release executor memory.
+  * `Ckpt.sweep` clears the session's whole cache manager, so it also
+  * unpersists this copy before its TTL lapses. The clock is injectable
+  * so the stale/fresh branches are unit-testable without sleeping.
   *
   * Scale: the pulse rollup is one row per (project, plan); persisting
   * it costs O(plans), while recomputing scans O(phase-status rows) —
@@ -69,5 +71,5 @@ object TtlCache {
 
   /** Convenience: a TTL-cached pulse over a status source. */
   def pulse(cache: TtlCache, statuses: => Dataset[PhaseStatus]): DataFrame =
-    cache.get(Streams.pulse(statuses))
+    cache.get(graft.queue.QueueOps.pulse(statuses))
 }

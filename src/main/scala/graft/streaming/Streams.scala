@@ -3,10 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.model.PhaseStatus
 
-/** Streaming sources, windows, and the pulse aggregation (SURVEY.md §2.1
-  * S1/S16/S22 + §2.2 streaming rows).
+/** Streaming sources and windows (SURVEY.md §2.1 S1/S22 + §2.2
+  * streaming rows). The pulse aggregation (S16) is
+  * `queue.QueueOps.pulse`, which runs on batch and streaming statuses.
   *
   * The reference's polling daemon (300 s loop, one plan at a time —
   * `scripts/starry-daemon.sh:209-226`) maps to a file-source stream with
@@ -228,10 +228,6 @@ object Streams {
     transitionPairs(events, gapMinutes)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
 
-  /** S16 — pulse aggregation over the status stream: per project/plan
-    * rollup {phases by status, total tools, last update, stalled count}
-    * (ref `agents/orbiter.md:198-242`). Works on batch or streaming
-    * status Datasets (complete output mode when streaming). */
   /** Streaming incremental ingest — the q122/q135 batch loop promoted
     * to Structured Streaming. Per micro-batch of documents:
     *  1. fingerprint (`TextOps.normFp`),
@@ -542,19 +538,4 @@ object Streams {
     * footer-inference winner lacks. */
   def readDecontamStore(s: SparkSession, storeDir: String): DataFrame =
     s.read.option("mergeSchema", "true").parquet(storeDir)
-
-  def pulse(statuses: Dataset[PhaseStatus]): DataFrame = {
-    val spark = statuses.sparkSession
-    import spark.implicits._
-    statuses.toDF()
-      .groupBy($"project", $"plan_id")
-      .agg(
-        count(lit(1)).as("n_phases"),
-        sum(when($"status" === "completed", 1).otherwise(0)).as("n_completed"),
-        sum(when($"status" === "failed", 1).otherwise(0)).as("n_failed"),
-        sum(when($"status" === "running" || $"status" === "starting", 1).otherwise(0)).as("n_active"),
-        sum(when($"status" === "stalled", 1).otherwise(0)).as("n_stalled"),
-        sum($"tool_count").as("total_tools"),
-        max($"updated_at").as("last_update"))
-  }
 }

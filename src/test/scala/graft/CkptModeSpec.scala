@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * executor-local, unreplicated, lineage-truncating) for a RELIABLE
   * `checkpoint(true)` (survives executor loss; the 100 TB form on
   * preemptible capacity). The contract: the mode changes durability
-  * only, never results. Exercised on operators that cut in loops
-  * (two-star CC) and at multi-consumer sites (q43's pruned status
-  * frame; q174's wins). */
+  * only, never results. Exercised on an operator that cuts in a loop
+  * (two-star CC) and at a multi-consumer site (q174's wins). */
 class CkptModeSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -20,7 +19,7 @@ class CkptModeSpec extends AnyFunSuite {
     SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq
 
   test("reliable ckpt mode yields bit-identical results to local mode") {
-    val qs = Seq("q246_cc_twostar", "q43_status_overview", "q174_range_join")
+    val qs = Seq("q246_cc_twostar", "q174_range_join")
     val local = qs.map(q => q -> rows(q)).toMap
     Ckpt.sweep(spark)
     spark.conf.set("spark.graft.ckpt.mode", "reliable")

@@ -509,7 +509,7 @@ class EtlSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("S24 transcript ETL: status classification and extraction") {
-    val out = TranscriptEtl.parse(TranscriptEtl.fixture(spark))
+    val out = TranscriptEtl.parse(graft.queue.Fixtures.transcripts(spark))
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out(1L).getAs[String]("status") == "completed")
     assert(out(2L).getAs[String]("status") == "completed_with_errors")

@@ -29,7 +29,7 @@ class QueueSpec extends AnyFunSuite {
   }
 
   test("S7+S8: bug outranks feature outranks chore; top-1 is the bug") {
-    val picked = QueueOps.fixtureSchedulerPick(spark).collect()
+    val picked = Fixtures.schedulerPick(spark).collect()
     assert(picked.length == 1)
     assert(picked.head.getString(0) == "plan-20260106-0900")
     assert(picked.head.getString(2) == "bug")
@@ -55,6 +55,30 @@ class QueueSpec extends AnyFunSuite {
     assert(ov.getAs[Long]("n_completed") == 2)
     assert(ov.getAs[Long]("n_failed") == 1)
     assert(math.abs(ov.getAs[Double]("pct_complete") - 66.7) < 0.01)
+  }
+
+  private def eta(ov: org.apache.spark.sql.DataFrame): Map[(String, String), (Long, Double)] =
+    ov.collect().map(r => (r.getAs[String]("project"), r.getAs[String]("plan_id")) ->
+      (r.getAs[Long]("n_remaining"), r.getAs[Double]("eta_sec"))).toMap
+
+  test("S19 ETA: mean completed-phase duration times remaining phases") {
+    val got = eta(QueueOps.statusOverview(Fixtures.statuses(spark)))
+    // alpha: completed in 1,200 s and 1,800 s, one failed phase remains
+    assert(got(("alpha", "plan-20260105-1530")) == ((1L, 1500.0)))
+    // beta: completed in 1,200 s, one running phase remains
+    assert(got(("beta", "plan-20260108-1200")) == ((1L, 1200.0)))
+  }
+
+  test("S19 ETA is per project: a shared plan id gets one ETA per project") {
+    import spark.implicits._
+    val shared = Seq(model.PhaseStatus("phase-1-plan-20260105-1530", "beta",
+      "plan-20260105-1530", 1, None, "running", 3, None, None,
+      Timestamp.valueOf("2026-01-05 16:05:00"), Timestamp.valueOf("2026-01-05 16:00:00"),
+      None)).toDS()
+    val got = eta(QueueOps.statusOverview(Fixtures.statuses(spark).union(shared)))
+    assert(got(("alpha", "plan-20260105-1530")) == ((1L, 1500.0)))
+    // beta's plan has no completed phase to time, so its ETA is 0
+    assert(got(("beta", "plan-20260105-1530")) == ((1L, 0.0)))
   }
 
   test("S20 legality: queued->completed is illegal, queued->active legal") {
@@ -221,13 +245,24 @@ class StratifySpec extends AnyFunSuite {
     assert(q40() == Map((1L, 1) -> 1, (1L, 2) -> 2, (1L, 3) -> 1))
   }
 
-  test("q40/q41 leave no persistent RDD behind without a sweep") {
+  test("q40-q45 leave no persistent RDD or cached plan behind without a sweep") {
     val sc = spark.sparkContext
+    val cache = spark.sharedState.cacheManager
+    // start from an empty cache manager, so the check after the queries
+    // sees only what they leave
+    spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
-    assert(rounds.Stratify.q40RoundStrata(spark, sf).collect().nonEmpty)
-    assert(rounds.Stratify.q41RoundSummary(spark, sf).collect().nonEmpty)
-    val left = sc.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"persistent RDDs left behind: $left")
+    Seq("q40_round_strata", "q41_round_summary", "q42_scheduler_pick",
+        "q43_status_overview", "q44_lifecycle_replay", "q45_pulse").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(df.collect().nonEmpty, s"$q returned no rows")
+      // the context cleaner unpersists an RDD once it is garbage, so
+      // check while the result is still reachable, as a caller's is
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$q left persistent RDDs behind: $left")
+      java.lang.ref.Reference.reachabilityFence(df)
+    }
+    assert(cache.isEmpty, "the cache manager holds plans the queries left behind")
   }
 
   test("q42 min/max-aggregation dependency sets equal the pair-join replay") {

@@ -1,15 +1,14 @@
 package graft.queue
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.model._
 
 /** Literal fixture rows replicating the reference's record shapes
   * (FIXTURES.md §B; schema authorities: `commands/nova.md:290-373,473-491`,
-  * `commands/pulsar.md:192-201,335-345`). Used by the unit tests and by
-  * `QueueOps.fixtureSchedulerPick`; no registered query reads them (the
+  * `commands/pulsar.md:192-201,335-345`), for the unit tests. The
   * driver-graded queries run over the parquet-derived tables in
-  * [[Derived]]).
+  * [[Derived]] instead.
   */
 object Fixtures {
 
@@ -91,5 +90,38 @@ object Fixtures {
         "bug", "queued", "background",
         "queued/background/plan-20260106-0900.md", ts("2026-01-06 09:00:00"), 1, 1)
     ).toDS()
+  }
+
+  /** The scheduler pipeline end-to-end on the fixture queue: S5
+    * dependency detection → S6 eligibility → S7 priority → S8 top-1
+    * pick. The driver-graded twin runs over parquet-derived tables in
+    * [[Derived.q42SchedulerPick]]. */
+  def schedulerPick(s: SparkSession): DataFrame = {
+    val ps = plans(s)
+    val deps = QueueOps.interPlanDeps(ps)
+    val elig = QueueOps.eligible(ps, deps)
+    val prio = QueueOps.withPriority(elig, deps, ts("2026-01-10 00:00:00"))
+    QueueOps.pickNext(prio).select("id", "project", "planType", "priority")
+  }
+
+  /** Transcripts mirroring the reference's raw-CLI examples (S24). */
+  def transcripts(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq(
+      (1L,
+        """Phase 1 starting.
+          |Created src/models/user.ts
+          |Modified src/api/auth.ts
+          |Running tests... 12 passed, 0 failed
+          |Committed [a1b2c3d] feat: add user model""".stripMargin),
+      (2L,
+        """Phase 2 starting.
+          |Error: TypeError: cannot read property 'id'
+          |Updated src/app.ts
+          |3 passed, 2 failed
+          |retrying...""".stripMargin),
+      (3L,
+        """Phase 3: fatal: repository corrupt, cannot continue""".stripMargin)
+    ).toDF("id", "transcript")
   }
 }

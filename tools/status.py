@@ -5,8 +5,10 @@ Modes:
   gen         — write STATUS.md (per-query correctness + bench deltas)
                 from the newest CORRECTNESS_r*.json / BENCH_r*.json
   check-coverage — verify every "qNN ◆ / qNN ○" marker in COVERAGE.md
-                against the correctness artifact, and that every cited
-                `…Spec` is a `class …Spec` under src/test; exit 1 on drift
+                against the correctness artifact, that every cited
+                `…Spec` is a `class …Spec` under src/test, and that every
+                backticked `Object.member` naming an engine object is
+                declared in it under src/main; exit 1 on drift
   bench-gate NEW [REF] — fail (exit 1) if any query regresses > 1.5x
                 vs the reference bench among queries >= 1s either side
 
@@ -553,6 +555,33 @@ def dangling_specs(text, test_root):
     cited = set(re.findall(r"\b([A-Z]\w*Spec)\b", text))
     return sorted(cited - defined)
 
+FILE_EXTS = {"scala", "md", "py", "json", "sh", "sbt", "parquet", "txt"}
+
+def dangling_members(text, main_root):
+    """Backticked `Object.member` citations in `text` whose Object is an
+    `object` defined under main_root but whose member no file defining
+    that object declares (def/val/var/type/class/trait/object), sorted.
+    File names (`SURVEY.md`, `Streams.scala`) and names that are no
+    engine object (`Dataset.unpivot`) are skipped."""
+    sources = {}
+    for d, _, files in os.walk(main_root):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f)) as fh:
+                    src = fh.read()
+                for obj in re.findall(r"\bobject\s+(\w+)", src):
+                    sources.setdefault(obj, []).append(src)
+    bad = set()
+    for span in re.findall(r"`([^`\n]+)`", text):
+        for obj, member in re.findall(r"\b([A-Z]\w*)\.(\w+)", span):
+            if obj not in sources or member in FILE_EXTS:
+                continue
+            decl = re.compile(r"\b(?:def|val|var|type|class|trait|object)\s+"
+                              + re.escape(member) + r"\b")
+            if not any(decl.search(src) for src in sources[obj]):
+                bad.add(f"{obj}.{member}")
+    return sorted(bad)
+
 def cmd_check_coverage(args):
     cpath = arg_opt(args, "--correctness") or newest("CORRECTNESS_r*.json")
     corr = load_correctness(cpath)
@@ -576,6 +605,9 @@ def cmd_check_coverage(args):
             bad.append(f"q{num} claims ○ but {name} is {v}")
     for spec in dangling_specs(text, os.path.join(ROOT, "src", "test")):
         bad.append(f"{spec}: cited, but no class {spec} under src/test")
+    for ref in dangling_members(text, os.path.join(ROOT, "src", "main")):
+        bad.append(f"{ref}: cited, but {ref.split('.')[0]} in src/main "
+                   f"declares no {ref.split('.')[1]}")
     if bad:
         print(f"COVERAGE.md drift vs {os.path.basename(cpath)}:")
         for b in sorted(set(bad)):

@@ -14,7 +14,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 from status import (spread_advisories, burst_window, load_bench_spread,
                     load_bench_box, box_drift_note, probe_norm_ratio,
-                    cmd_bench_gate, dangling_specs)  # noqa: E402
+                    cmd_bench_gate, dangling_specs,
+                    dangling_members)  # noqa: E402
 
 
 def main():
@@ -397,6 +398,23 @@ def main():
     assert dangling_specs(cov, os.path.join(root_, "src", "test")) == [], \
         dangling_specs(cov, os.path.join(root_, "src", "test"))
 
+    # --- check-coverage: every cited engine member must be declared --
+    mroot = tempfile.mkdtemp()
+    with open(os.path.join(mroot, "QueueOps.scala"), "w") as f:
+        f.write("package graft.queue\nobject QueueOps {\n"
+                "  def pulse(s: Int): Int = s\n  val legalMoves = Set(1)\n}\n")
+    ok_text = ("| S16 | `queue.QueueOps.pulse` | ... | QueueSpec |\n"
+               "| S20 | `QueueOps.legalMoves`, `QueueOps.scala`, `SURVEY.md`, "
+               "`Dataset.unpivot` |\n")
+    assert dangling_members(ok_text, mroot) == [], dangling_members(ok_text, mroot)
+    gone = ok_text + "| S19 | `queue.QueueOps.etaSeconds` |\n"
+    assert dangling_members(gone, mroot) == ["QueueOps.etaSeconds"], \
+        dangling_members(gone, mroot)
+    shutil.rmtree(mroot)
+    # the committed COVERAGE.md cites only members the engine declares
+    assert dangling_members(cov, os.path.join(root_, "src", "main")) == [], \
+        dangling_members(cov, os.path.join(root_, "src", "main"))
+
     # --- STATUS.md freshness pin (VERDICT r16 item 6) -----------------
     # The committed STATUS.md must never describe a superseded bench
     # record: the bench source named on its Sources line must be from
@@ -422,7 +440,7 @@ def main():
     print("test_status: OK (spread advisory fires once, suppressions hold; "
           "burst window named from rep provenance + truncation guard; "
           "reps field round-trips; box drift adjudicated from probes; "
-          "dangling spec citations caught; "
+          "dangling spec and member citations caught; "
           "STATUS.md bench source is not superseded)")
 
 
