@@ -370,9 +370,14 @@ object Bench {
     // median rep and be counted twice; in practice warmup pays all).
     // Round-over-round PERF comparisons should prefer cold totals so a
     // build shifted into a memo can never masquerade as a speedup.
+    // hit, miss and superseded counts per memo label, beside the pays
+    val countsJson = SessionCache.countsSnapshot.toSeq.sortBy(_._1).map {
+      case (label, (hits, misses, superseded)) =>
+        s""""$label":{"hits":$hits,"misses":$misses,"superseded":$superseded}"""
+    }.mkString("{", ",", "}")
     val memoTotal = memoPays.map(_._5).sum
     val valueCold = total + memoTotal
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","value_cold":$valueCold,"memo_build_s":${r3(memoTotal)},"queries":$qjson,"spread":$sjson,"failed":$fjson,"box":$bjson,"memo_pays":$mjson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","value_cold":$valueCold,"memo_build_s":${r3(memoTotal)},"queries":$qjson,"spread":$sjson,"failed":$fjson,"box":$bjson,"memo_pays":$mjson,"memo_counts":$countsJson,"sf":"$sfDir"}"""
     println(json)
     // The driver's BENCH_r*.json keeps only a tail of the stdout line, so
     // early-alphabet queries vanish from the per-round record. Persist the

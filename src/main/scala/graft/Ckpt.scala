@@ -61,39 +61,43 @@ object Ckpt {
   /** Eager cut whose blocks survive `sweep` — use ONLY for
     * DataFrames memoized across queries.
     *
-    * Pins by the checkpointed DataFrame's OWN rdd id: `localCheckpoint`
-    * returns a Dataset whose analyzed plan is the `LogicalRDD` wrapping
-    * exactly the persisted RDD, so that id is read off the plan. (The
-    * previous implementation diffed `getPersistentRDDs` around the call,
-    * which permanently pinned any `.persist()` issued by a concurrent
-    * thread during the window.) `LogicalRDD.rdd` is `private[sql]`,
-    * which erases to a public accessor in bytecode — reflection reaches
-    * it without copying Spark internals. */
+    * Pins by the checkpointed DataFrame's OWN rdd id, read off its plan
+    * ([[rddOf]]). (The previous implementation diffed
+    * `getPersistentRDDs` around the call, which permanently pinned any
+    * `.persist()` issued by a concurrent thread during the window.) */
   def pinned(df: DataFrame): DataFrame = {
     val out = cut(df)
-    val plan = out.queryExecution.analyzed
-    val rdd =
-      try plan.getClass.getMethod("rdd").invoke(plan)
-        .asInstanceOf[org.apache.spark.rdd.RDD[_]]
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"Ckpt.pinned: expected a LogicalRDD plan from localCheckpoint, " +
-            s"got ${plan.getClass.getName}", e)
-      }
+    val rdd = rddOf(out).getOrElse(throw new IllegalStateException(
+      "Ckpt.pinned: expected a LogicalRDD plan from localCheckpoint, got " +
+        out.queryExecution.analyzed.getClass.getName))
     pinnedIds.add((rdd.context.applicationId, rdd.id))
     out
+  }
+
+  /** Release a `pinned` frame the way a per-request cut is released:
+    * its blocks stay readable (a reader in flight keeps working) until
+    * the next `sweep` or the context cleaner frees them. No-op on a
+    * frame that is not pinned. */
+  def unpin(df: DataFrame): Unit =
+    rddOf(df).foreach(r => pinnedIds.remove((r.context.applicationId, r.id)))
+
+  /** The persisted RDD behind a checkpointed frame: `localCheckpoint`
+    * returns a Dataset whose analyzed plan is the `LogicalRDD` wrapping
+    * exactly that RDD. `LogicalRDD.rdd` is `private[sql]`, which erases
+    * to a public accessor in bytecode, so reflection reaches it without
+    * copying Spark internals. None for any other plan. */
+  private[graft] def rddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
+    val plan = df.queryExecution.analyzed
+    try Some(plan.getClass.getMethod("rdd").invoke(plan)
+      .asInstanceOf[org.apache.spark.rdd.RDD[_]])
+    catch { case _: Exception => None }
   }
 
   /** Free one localCheckpoint's blocks NOW — for iterative fixpoints
     * that supersede a checkpointed table every round: without this, a
     * k-round loop holds k full table copies in executor storage until
     * the post-query sweep. No-op on non-checkpoint plans. */
-  def free(df: DataFrame): Unit = {
-    val plan = df.queryExecution.analyzed
-    try plan.getClass.getMethod("rdd").invoke(plan)
-      .asInstanceOf[org.apache.spark.rdd.RDD[_]].unpersist(false)
-    catch { case _: Exception => () }
-  }
+  def free(df: DataFrame): Unit = rddOf(df).foreach(_.unpersist(false))
 
   /** Free all persisted blocks except pinned ones. Dataset-level caches
     * (`.persist()`) are cleared via the cache manager first — those have

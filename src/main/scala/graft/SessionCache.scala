@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.LongAdder
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.SparkSession
 
 /** Cross-query memo cache keyed by (session, dataset dir) — the shared
-  * shape behind Dedup's pair cache and Graph's edge cache.
+  * shape behind Dedup's pair cache, Graph's edge cache and the queue's
+  * status rollup.
   *
   * A bare ConcurrentHashMap keyed by SparkSession is process-lifetime:
   * a JVM that creates and stops many sessions (test suites, notebook
@@ -15,16 +19,25 @@ import org.apache.spark.sql.SparkSession
   * DataFrame value strongly references its session key, which defeats
   * weak-key collection.)
   *
-  * `onDiscard` runs on a value that lost a concurrent-build race (its
-  * `putIfAbsent` was beaten) — for values holding external resources,
-  * e.g. `Ckpt.pinned` DataFrames whose checkpoint blocks would
-  * otherwise stay pinned for the session's lifetime, pass
-  * `graft.Ckpt.free`.
+  * One build per key: concurrent first lookups of one key wait on a
+  * single build instead of each running their own. A build that throws
+  * fails every waiter and leaves no entry behind, so the next lookup
+  * builds again.
+  *
+  * Input version: a caller whose inputs can change passes `version`
+  * (e.g. [[Tables.version]] of the files the build reads). An entry
+  * answers only lookups with an equal version; a lookup with another
+  * version builds a new value and replaces the entry, and the
+  * superseded value is handed to `release` once it is built. `release`
+  * may run twice on one value, so it must be idempotent; for
+  * `Ckpt.pinned` values pass `graft.Ckpt.unpin`, which leaves the blocks
+  * readable by requests still in flight until the next sweep.
   */
-final class SessionCache[V >: Null](onDiscard: V => Unit = (_: V) => (),
-                                    label: String = "") {
+final class SessionCache[V >: Null](label: String = "",
+                                    release: V => Unit = (_: V) => ()) {
   private val m =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SessionCache.Entry[V]]()
+  private val counts = SessionCache.countsOf(label)
 
   private def purge(): Unit = {
     val it = m.keySet.iterator()
@@ -33,75 +46,117 @@ final class SessionCache[V >: Null](onDiscard: V => Unit = (_: V) => (),
     }
   }
 
-  /** Memoized lookup. `build` runs outside any map lock (it may launch
-    * Spark jobs, which must not serialize behind a CHM bin lock); two
-    * concurrent callers may both build, but only the first `putIfAbsent`
-    * is kept — the loser's value is released via `onDiscard` and the
-    * winner returned, so both callers observe the SAME cached value and
-    * no resource leaks. */
-  def getOrElseUpdate(s: SparkSession, dir: String, build: => V): V = {
+  /** Memoized lookup of (s, dir) at input `version`. `build` runs
+    * outside any map lock (it may launch Spark jobs, which must not
+    * serialize behind a CHM bin lock); callers that arrive during it
+    * wait for its value. */
+  def getOrElseUpdate(s: SparkSession, dir: String, build: => V,
+                      version: Any = None): V = {
     purge()
-    val k = (s, dir)
+    lookup((s, dir), build, version)
+  }
+
+  @annotation.tailrec
+  private def lookup(k: (SparkSession, String), build: => V, version: Any): V = {
     val cur = m.get(k)
-    if (cur != null) cur
-    else {
-      // NET-of-nested accounting (ADVICE r15): a memo build that
-      // invokes another memo build inside it (q105's cluster build
-      // runs the jaccard-pair build) must not double-count the inner
-      // seconds in the ledger — each entry records its OWN work, so
-      // advisory readers can sum entries. Thread-local child-time
-      // accumulator: net = gross − sum(direct children's gross).
-      val saved = SessionCache.childSecs.get()
-      SessionCache.childSecs.set(0.0)
-      val t0 = System.nanoTime()
-      val v =
-        try build
-        catch {
-          case e: Throwable =>
-            // exception safety (CODE-REVIEW r16): a throwing build must
-            // restore the accumulator, or the NEXT sibling's frame nets
-            // against a corrupted zero. Restoring `saved` (not saved +
-            // gross) charges the failed attempt's seconds to the parent
-            // entry — the failed child recorded nothing, so this keeps
-            // Σ(ledger entries) == Σ(actual build work).
-            SessionCache.childSecs.set(saved)
-            throw e
+    if (cur != null && cur.version == version) {
+      counts.hits.increment()
+      Await.result(cur.value.future, Duration.Inf)
+    } else {
+      val mine = new SessionCache.Entry[V](version)
+      val won = if (cur == null) m.putIfAbsent(k, mine) == null else m.replace(k, cur, mine)
+      if (!won) lookup(k, build, version)
+      else {
+        counts.misses.increment()
+        if (cur != null) {
+          counts.superseded.increment()
+          // a superseded build still in flight releases its own value
+          cur.value.future.value.foreach(_.foreach(release))
         }
-      val gross = (System.nanoTime() - t0) / 1e9
-      SessionCache.recordPay(label, t0, gross - SessionCache.childSecs.get())
-      SessionCache.childSecs.set(saved + gross)
-      val prior = m.putIfAbsent(k, v)
-      if (prior != null) { onDiscard(v); prior } else v
+        run(k, mine, build)
+      }
     }
   }
 
-  private[graft] def size: Int = { purge(); m.size() }
+  private def run(k: (SparkSession, String), mine: SessionCache.Entry[V], build: => V): V = {
+    // NET-of-nested accounting: a memo build that invokes another memo
+    // build inside it (q105's cluster build runs the jaccard-pair build)
+    // must not double-count the inner seconds in the ledger — each entry
+    // records its OWN work, so advisory readers can sum entries.
+    // Thread-local child-time accumulator: net = gross − sum(direct
+    // children's gross).
+    val saved = SessionCache.childSecs.get()
+    SessionCache.childSecs.set(0.0)
+    val t0 = System.nanoTime()
+    val v =
+      try build
+      catch {
+        case e: Throwable =>
+          // exception safety: a throwing build must restore the
+          // accumulator, or the NEXT sibling's frame nets against a
+          // corrupted zero. Restoring `saved` (not saved +
+          // gross) charges the failed attempt's seconds to the parent
+          // entry — the failed child recorded nothing, so this keeps
+          // Σ(ledger entries) == Σ(actual build work).
+          SessionCache.childSecs.set(saved)
+          // drop the entry before failing the waiters, so a lookup that
+          // arrives after the failure builds again
+          m.remove(k, mine)
+          mine.value.failure(e)
+          throw e
+      }
+    val gross = (System.nanoTime() - t0) / 1e9
+    SessionCache.recordPay(label, t0, gross - SessionCache.childSecs.get())
+    SessionCache.childSecs.set(saved + gross)
+    mine.value.success(v)
+    // superseded while building: its callers still get `v`, but no
+    // later lookup will, so release it (the replacer may have too)
+    if (m.get(k) ne mine) release(v)
+    v
+  }
 }
 
-/** Process-wide MEMO-PAY LEDGER (VERDICT r14 item 5): every actual
-  * memo `build` execution (cache misses AND race losers — both paid
-  * the cost) records (label, buildStartNanos, buildSeconds). Bench
-  * drains the ledger after the timed window and attributes each pay to
-  * the query/pass whose rep window contains it, so a memoized query's
-  * bimodal rep spread is mechanically explainable (the slow rep paid a
-  * memo) or mechanically escalatable (the ledger shows no pay — the
-  * spread has another cause) from the record alone, instead of the r14
-  * q34 adjudication stopping one step short of naming the payer.
-  * Bounded: one entry per (session, dir, cache) build — a handful per
-  * bench run. */
+/** Process-wide MEMO-PAY LEDGER: every actual memo `build` execution
+  * records (label, buildStartNanos, buildSeconds). Bench drains the ledger after the timed window and
+  * attributes each pay to the query/pass whose rep window contains it,
+  * so a memoized query's bimodal rep spread is mechanically explainable
+  * (the slow rep paid a memo) or mechanically escalatable (the ledger
+  * shows no pay — the spread has another cause) from the record alone.
+  * Bounded: one entry per (session, dir, version, cache) build — a
+  * handful per bench run.
+  *
+  * Next to it, per-label lookup counts: hits (answered by an entry,
+  * also while waiting on its build), misses (started a build; a miss
+  * whose build threw records no pay) and superseded (a miss that
+  * replaced an entry of another input version). */
 object SessionCache {
+  private final class Entry[V](val version: Any) {
+    val value: Promise[V] = Promise[V]()
+  }
+
+  private final class Counts {
+    val hits, misses, superseded = new LongAdder
+  }
+
   private val pays =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Double)]()
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[String, Counts]()
+
+  private def name(label: String): String = if (label.isEmpty) "unlabeled" else label
+
+  private def countsOf(label: String): Counts =
+    counts.computeIfAbsent(name(label), _ => new Counts)
 
   /** Per-thread accumulator of direct-child build gross seconds —
-    * see the net-of-nested comment in [[SessionCache.getOrElseUpdate]]. */
+    * see the net-of-nested comment in `SessionCache.run`. */
   private[graft] val childSecs: ThreadLocal[java.lang.Double] =
     ThreadLocal.withInitial(() => java.lang.Double.valueOf(0.0))
 
   /** `secs` is NET of nested memo builds on the same thread: entries
     * are disjoint work and may be summed by advisory readers. */
   private[graft] def recordPay(label: String, t0: Long, secs: Double): Unit =
-    pays.add((if (label.isEmpty) "unlabeled" else label, t0, secs))
+    pays.add((name(label), t0, secs))
 
   /** Snapshot of all builds since process start (label, startNanos,
     * seconds) — nano timestamps are System.nanoTime, comparable to the
@@ -109,6 +164,14 @@ object SessionCache {
   private[graft] def paysSnapshot: Vector[(String, Long, Double)] = {
     val b = Vector.newBuilder[(String, Long, Double)]
     pays.forEach(p => b += p)
+    b.result()
+  }
+
+  /** Snapshot of the lookup counts since process start:
+    * label -> (hits, misses, superseded). */
+  private[graft] def countsSnapshot: Map[String, (Long, Long, Long)] = {
+    val b = Map.newBuilder[String, (Long, Long, Long)]
+    counts.forEach((l, c) => b += l -> ((c.hits.sum, c.misses.sum, c.superseded.sum)))
     b.result()
   }
 }

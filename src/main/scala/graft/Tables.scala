@@ -18,6 +18,26 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Input version of tables `names` under `dir`: the (path, length,
+    * mtime) of every leaf file, sorted. A rewrite of any of them
+    * changes it (an overwrite writes new part-file names), so a memo
+    * keyed by it never answers from superseded files. Plain
+    * `listStatus` calls through the session's Hadoop file system (about
+    * 0.02 ms each on local disk; `listFiles` also resolves block
+    * locations and costs ~4 ms a file), so callers compute it on every
+    * request. */
+  def version(spark: SparkSession, dir: String, names: String*): Vector[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    def leaves(fs: FileSystem, p: Path): Vector[FileStatus] =
+      fs.listStatus(p).toVector.flatMap(f => if (f.isDirectory) leaves(fs, f.getPath) else Vector(f))
+    val conf = spark.sparkContext.hadoopConfiguration
+    names.toVector.flatMap { n =>
+      val p = new Path(s"$dir/$n.parquet")
+      leaves(p.getFileSystem(conf), p)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    }.sorted
+  }
+
   /** Scan-parallelism floor for per-row-heavy pipelines (optimization
     * guide §2.5, "one huge unsplittable file ... repartition immediately
     * after the read"): the test tables are single-row-group parquet, so

@@ -58,7 +58,7 @@ object Dedup {
     * re-joins the corpus. Per-doc shingle ARRAYS (q34/q46's verify
     * side) stay un-memoized — different shape, array not exploded. */
   private val docShCache =
-    new graft.SessionCache[DataFrame](graft.Ckpt.free, "doc_shingles")
+    new graft.SessionCache[DataFrame]("doc_shingles")
 
   def docShingles(s: SparkSession, dir: String): DataFrame =
     docShCache.getOrElseUpdate(s, dir, {
@@ -709,7 +709,7 @@ object Dedup {
     * bench/verify run (same pattern as Graph's edge cache).
     * Dead-session entries are purged on access ([[graft.SessionCache]]). */
   private val pairCache =
-    new graft.SessionCache[DataFrame](graft.Ckpt.free, "jaccard_pairs")
+    new graft.SessionCache[DataFrame]("jaccard_pairs")
 
   /** Connected components by min-label propagation WITH pointer
     * halving, as a DataFrame fixpoint. Each round every node takes
@@ -905,7 +905,7 @@ object Dedup {
     * reads the label table — the same shared-intermediate decision as
     * the pair/edge/shingle caches, memoized the same way. */
   private val clusterCache =
-    new graft.SessionCache[DataFrame](graft.Ckpt.free, "dedup_clusters")
+    new graft.SessionCache[DataFrame]("dedup_clusters")
 
   def q105DedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

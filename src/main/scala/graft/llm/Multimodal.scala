@@ -1030,11 +1030,9 @@ object Multimodal {
     * queries consume its 8-byte-per-frame output (q257 dedup, q263
     * alignment). A production pipeline computes the signature table
     * once and runs every downstream consumer off it; the memo is that
-    * artifact (pinned LogicalRDD — survives per-query sweeps; a
-    * race-losing build frees its blocks via onDiscard). */
+    * artifact (pinned LogicalRDD — survives per-query sweeps). */
   private val videoSigsCache =
-    new graft.SessionCache[DataFrame](onDiscard = graft.Ckpt.free,
-      label = "video_sigs")
+    new graft.SessionCache[DataFrame]("video_sigs")
 
   private def cachedVideoSigs(s: SparkSession, dir: String): DataFrame =
     videoSigsCache.getOrElseUpdate(s, dir,

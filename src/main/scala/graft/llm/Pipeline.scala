@@ -359,10 +359,7 @@ object Pipeline {
     * artifact. Pinned so the blocks survive the per-query sweep; the
     * build is attributed on the bench's memo_pays ledger. */
   private val funnelCache =
-    new graft.SessionCache[(DataFrame, Seq[(Int, String, DataFrame)])](
-      onDiscard = { case (st, sts) =>
-        graft.Ckpt.free(st); sts.foreach(t => graft.Ckpt.free(t._3)) },
-      label = "funnel_stages")
+    new graft.SessionCache[(DataFrame, Seq[(Int, String, DataFrame)])]("funnel_stages")
 
   private def funnelArtifacts(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, DataFrame)]) =

@@ -1109,9 +1109,8 @@ object TextOps {
   /** Cross-query memo of the k=8 merge table per (session, dir): q251
     * grades the table, q256 applies it — a tokenizer trains ONCE and
     * every consumer reads the artifact (the pairCache discipline for
-    * driver-resident model state; the value is a 5-tuple Vector, so
-    * onDiscard is a no-op and the ledger still records the training
-    * seconds under "bpe_merges"). */
+    * driver-resident model state; the value is a 5-tuple Vector, and
+    * the ledger records the training seconds under "bpe_merges"). */
   private val mergeCache =
     new graft.SessionCache[Vector[(String, String, Long, String, Long)]](
       label = "bpe_merges")
@@ -1402,11 +1401,10 @@ object TextOps {
   /** Cross-query memo of the k=16 int-form training artifacts per
     * (session, dir) — the mergeCache discipline, now holding BOTH
     * outputs of one training run: the 16-row merge table (q259 grades
-    * it) and the PINNED encoded vocabulary (q261 joins it). A
-    * race-losing build frees its vocabulary blocks via onDiscard. */
+    * it) and the PINNED encoded vocabulary (q261 joins it). */
   private val mergeCache16 =
     new graft.SessionCache[(Vector[(Int, Int, Long, String, String, String, Long)],
-      DataFrame)](onDiscard = v => graft.Ckpt.free(v._2), label = "bpe_merges16")
+      DataFrame)]("bpe_merges16")
 
   private def cachedInt16(s: SparkSession, dir: String)
       : (Vector[(Int, Int, Long, String, String, String, Long)], DataFrame) =

@@ -27,6 +27,11 @@ import graft.model.{PhaseStatus, ToolEvent}
   * detector self-joins on (project, file) — shuffle-partitioned by
   * file key exactly like the production `QueueOps.interPlanDeps`, and
   * scoped to a project so one hot file doesn't couple every plan pair.
+  *
+  * Serving: q43 and q45 are projections of one pinned status rollup
+  * per (session, dir, input version) ([[statusRollup]]), so a dashboard
+  * poll reads one row per plan instead of re-joining `lineitem ⋈
+  * orders`; the other entries compute per request.
   */
 object Derived {
 
@@ -244,10 +249,25 @@ object Derived {
       |       CAST(least(greatest(raw, 1), 5) AS INT) AS priority
       |FROM prio ORDER BY priority, created_at, id LIMIT 1""".stripMargin
 
+  private val rollups = new graft.SessionCache[DataFrame]("status_rollup", graft.Ckpt.unpin)
+
+  /** The per-(project, plan) status rollup of `dir` with all ten of
+    * its aggregates (`QueueOps.statusRollup` over [[statuses]]), pinned
+    * once per (session, dir, input version) and shared by q43 and q45
+    * — the reference reuses one pulse snapshot instead of rescanning
+    * (S17, `commands/pulse.md:84-93`). The version is the (path,
+    * length, mtime) of every `lineitem` and `orders` file, computed on
+    * every call, so a rewritten table is read on the next request; the
+    * superseded memo is unpinned and freed by the next sweep. */
+  def statusRollup(s: SparkSession, dir: String): DataFrame =
+    rollups.getOrElseUpdate(s, dir,
+      graft.Ckpt.pinned(QueueOps.statusRollup(statuses(s, dir))),
+      version = Tables.version(s, dir, "lineitem", "orders"))
+
   /** q43 — status overview with ETA (S18/S19) over the derived status
     * table, through the production `QueueOps.statusOverview`. */
   def q43StatusOverview(s: SparkSession, dir: String): DataFrame =
-    QueueOps.statusOverview(statuses(s, dir))
+    QueueOps.statusOverview(statusRollup(s, dir))
 
   val q43Sql: String =
     s"""WITH $statusesCte,
@@ -279,7 +299,7 @@ object Derived {
     * the production `QueueOps.pulse`. */
   def q45Pulse(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    QueueOps.pulse(statuses(s, dir)).orderBy($"project", $"plan_id")
+    QueueOps.pulse(statusRollup(s, dir)).orderBy($"project", $"plan_id")
   }
 
   val q45Sql: String =

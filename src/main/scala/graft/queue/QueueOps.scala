@@ -108,12 +108,15 @@ object QueueOps {
   /** The per-(project, plan) status rollup behind S16, S18 and S19 (ref
     * `commands/pulse.md:27-61`, `commands/pulsar-status.md:40-128`):
     * one aggregation computes every column the pulse, the overview and
-    * the ETA read. [[pulse]] and [[statusOverview]] project it, and
-    * Catalyst's column pruning drops the aggregates a projection does
-    * not read, so each runs only its own. `avg` ignores NULLs, so
-    * `avg_dur` is the mean duration of completed phases that carry a
-    * completion time (NULL when there are none). */
-  private def statusRollup(statuses: Dataset[PhaseStatus]): DataFrame = {
+    * the ETA read. [[pulse]] and [[statusOverview]] project it. Over a
+    * lazy source, Catalyst's column pruning drops the aggregates a
+    * projection does not read, so each runs only its own; the parquet
+    * twin (`Derived.statusRollup`) instead pins all ten once per input
+    * version and serves both projections from it. `avg` ignores NULLs,
+    * so `avg_dur` is the mean duration of completed phases that carry a
+    * completion time (NULL when there are none). Works on batch or
+    * streaming status Datasets. */
+  def statusRollup(statuses: Dataset[PhaseStatus]): DataFrame = {
     val s = statuses.sparkSession
     import s.implicits._
     def n(c: Column): Column = sum(when(c, 1).otherwise(0))
@@ -135,26 +138,27 @@ object QueueOps {
   }
 
   /** S16 — pulse: phases by status, total tools, last update and
-    * stalled count per (project, plan) (ref `agents/orbiter.md:198-242`).
-    * Works on batch or streaming status Datasets (complete output mode
-    * when streaming). */
-  def pulse(statuses: Dataset[PhaseStatus]): DataFrame = {
-    val s = statuses.sparkSession
+    * stalled count per (project, plan) (ref `agents/orbiter.md:198-242`),
+    * projected from a [[statusRollup]] frame (complete output mode when
+    * streaming). */
+  def pulse(rollup: DataFrame): DataFrame = {
+    val s = rollup.sparkSession
     import s.implicits._
-    statusRollup(statuses).select($"project", $"plan_id", $"n_phases",
+    rollup.select($"project", $"plan_id", $"n_phases",
       $"n_completed", $"n_failed", $"n_active", $"n_stalled",
       $"total_tools", $"last_update")
   }
 
   /** S18 + S19 — status overview with percent complete and ETA: mean
     * duration of the plan's completed phases × its remaining count
-    * (ref `commands/pulsar-status.md:87`). ETA is per (project, plan),
-    * since plan ids are scoped per project. The columns keep q43's
-    * published order, `plan_id` first. */
-  def statusOverview(statuses: Dataset[PhaseStatus]): DataFrame = {
-    val s = statuses.sparkSession
+    * (ref `commands/pulsar-status.md:87`), projected from a
+    * [[statusRollup]] frame. ETA is per (project, plan), since plan ids
+    * are scoped per project. The columns keep q43's published order,
+    * `plan_id` first. */
+  def statusOverview(rollup: DataFrame): DataFrame = {
+    val s = rollup.sparkSession
     import s.implicits._
-    statusRollup(statuses).select($"plan_id", $"project", $"n_phases",
+    rollup.select($"plan_id", $"project", $"n_phases",
         $"n_completed", $"n_failed", $"n_running", $"total_tools",
         $"last_update",
         round($"n_completed" * 100.0 / $"n_phases", 1).as("pct_complete"),

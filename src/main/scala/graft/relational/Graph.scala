@@ -209,7 +209,7 @@ object Graph {
     * both graph metrics shares the edge build; so do we — ~2.3 s of the
     * two queries' ~4 s each was this build, paid twice. */
   private val edgeCache =
-    new graft.SessionCache[DataFrame](graft.Ckpt.free, "graph_edges")
+    new graft.SessionCache[DataFrame]("graph_edges")
 
   private def coVisitEdgesCached(s: SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(s, dir, {

@@ -10,12 +10,18 @@ import graft.model.PhaseStatus
   * result with a freshness contract, not a live view.
   *
   * Implementation: the rolled-up DataFrame ([[TtlCache.pulse]] caches
-  * `queue.QueueOps.pulse`) is persisted on first compute (so reuse is
-  * a cache read, not a re-aggregation) and invalidated when the TTL
-  * lapses — the stale copy is unpersisted to release executor memory.
-  * `Ckpt.sweep` clears the session's whole cache manager, so it also
-  * unpersists this copy before its TTL lapses. The clock is injectable
-  * so the stale/fresh branches are unit-testable without sleeping.
+  * `queue.QueueOps.pulse` of the status rollup) is persisted on first
+  * compute (so reuse is a cache read, not a re-aggregation) and
+  * invalidated when the TTL lapses — the stale copy is unpersisted to
+  * release executor memory. `Ckpt.sweep` clears the session's whole
+  * cache manager, so it also unpersists this copy before its TTL
+  * lapses. The clock is injectable so the stale/fresh branches are
+  * unit-testable without sleeping.
+  *
+  * This is the contract for status sources without a file version
+  * (a stream, an in-memory Dataset). The parquet twin q45 needs no TTL:
+  * `queue.Derived.statusRollup` keys its memo by the input files'
+  * version, so it is never stale and never recomputed while unchanged.
   *
   * Scale: the pulse rollup is one row per (project, plan); persisting
   * it costs O(plans), while recomputing scans O(phase-status rows) —
@@ -71,5 +77,5 @@ object TtlCache {
 
   /** Convenience: a TTL-cached pulse over a status source. */
   def pulse(cache: TtlCache, statuses: => Dataset[PhaseStatus]): DataFrame =
-    cache.get(graft.queue.QueueOps.pulse(statuses))
+    cache.get(graft.queue.QueueOps.pulse(graft.queue.QueueOps.statusRollup(statuses)))
 }

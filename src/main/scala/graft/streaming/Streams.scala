@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Streaming sources and windows (SURVEY.md §2.1 S1/S22 + §2.2
   * streaming rows). The pulse aggregation (S16) is
-  * `queue.QueueOps.pulse`, which runs on batch and streaming statuses.
+  * `queue.QueueOps.pulse` of `queue.QueueOps.statusRollup`, which runs
+  * on batch and streaming statuses.
   *
   * The reference's polling daemon (300 s loop, one plan at a time —
   * `scripts/starry-daemon.sh:209-226`) maps to a file-source stream with

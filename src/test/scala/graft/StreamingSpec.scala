@@ -1365,7 +1365,7 @@ class StreamingSpec extends AnyFunSuite {
     * flight admission (maxFilesPerTrigger=1) → the "executor" emits each
     * admitted plan's tool events (pulsar-auto.sh stand-in, idempotent by
     * filename) → [[Lifecycle.statusStream]] folds them into statuses →
-    * [[queue.QueueOps.pulse]] rolls them up. Both queries are KILLED mid-run
+    * [[queue.QueueOps.pulse]] projects their rollup. Both queries are KILLED mid-run
     * and restarted on their checkpoints with a new plan queued while
     * "down"; the end state must be exactly-once: every plan admitted
     * once, every status correct, pulse identical to the batch
@@ -1473,7 +1473,7 @@ class StreamingSpec extends AnyFunSuite {
     // pulse rollup over the chain's end state (orbiter's 30s watcher) —
     // fed by the replay Dataset, which the block above just proved
     // record-identical to the streamed status table
-    val pulse = queue.QueueOps.pulse(replayedDs)
+    val pulse = queue.QueueOps.pulse(queue.QueueOps.statusRollup(replayedDs))
       .collect().map(r => r.getAs[String]("plan_id") -> r).toMap
     planMinute.keys.foreach { id =>
       val p = pulse(id)
