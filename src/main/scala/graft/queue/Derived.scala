@@ -40,9 +40,11 @@ object Derived {
 
   /** Derived plan-queue table: (id, project, status, plan_type,
     * exec_mode, created_at). */
-  def plans(s: SparkSession, dir: String): DataFrame = {
+  def plans(s: SparkSession, dir: String): DataFrame = plansOf(s, Tables.orders(s, dir))
+
+  private def plansOf(s: SparkSession, orders: DataFrame): DataFrame = {
     import s.implicits._
-    Tables.orders(s, dir).select(
+    orders.select(
       $"o_orderkey".as("id"),
       concat(lit("proj_"), ($"o_custkey" % 5).cast("string")).as("project"),
       when($"o_orderstatus" === "O", "queued")
@@ -74,12 +76,18 @@ object Derived {
       |         o_orderdate AS created_at
       |  FROM orders)""".stripMargin
 
+  /** The tables [[statuses]] reads, and so the tables whose files make
+    * up [[statusRollup]]'s input version. `statuses` reads through this
+    * list only: a table missing from it fails the first call. */
+  val statusTables: Seq[String] = Seq("lineitem", "orders")
+
   /** Derived per-phase status table, typed as the reference's
     * PhaseStatus record so the real S16/S18 operators run over it. */
   def statuses(s: SparkSession, dir: String): Dataset[PhaseStatus] = {
     import s.implicits._
-    val proj = plans(s, dir).select($"id".as("okey"), $"project")
-    Tables.lineitem(s, dir)
+    val in = statusTables.map(n => n -> Tables.t(s, dir, n)).toMap
+    val proj = plansOf(s, in("orders")).select($"id".as("okey"), $"project")
+    in("lineitem")
       .join(proj, $"l_orderkey" === $"okey")
       .select(
         concat(lit("phase-"), $"l_linenumber".cast("string"),
@@ -256,13 +264,13 @@ object Derived {
     * once per (session, dir, input version) and shared by q43 and q45
     * — the reference reuses one pulse snapshot instead of rescanning
     * (S17, `commands/pulse.md:84-93`). The version is the (path,
-    * length, mtime) of every `lineitem` and `orders` file, computed on
+    * length, mtime) of every file of [[statusTables]], computed on
     * every call, so a rewritten table is read on the next request; the
     * superseded memo is unpinned and freed by the next sweep. */
   def statusRollup(s: SparkSession, dir: String): DataFrame =
     rollups.getOrElseUpdate(s, dir,
       graft.Ckpt.pinned(QueueOps.statusRollup(statuses(s, dir))),
-      version = Tables.version(s, dir, "lineitem", "orders"))
+      version = Tables.version(s, dir, statusTables: _*))
 
   /** q43 — status overview with ETA (S18/S19) over the derived status
     * table, through the production `QueueOps.statusOverview`. */

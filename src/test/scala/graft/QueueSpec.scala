@@ -202,6 +202,15 @@ class QueueSpec extends AnyFunSuite {
     assert(ids.filter(live) == Seq(ids.last), s"live rollups ${ids.filter(live)} of $ids")
   }
 
+  test("the status rollup's input version covers every file the statuses read") {
+    def path(uri: String) = new java.net.URI(uri).getPath
+    val read = queue.Derived.statuses(spark, sf).inputFiles.map(path).toSet
+    val versioned = Tables.version(spark, sf, queue.Derived.statusTables: _*).map(v => path(v._1)).toSet
+    assert(read.nonEmpty && read.subsetOf(versioned), s"unversioned inputs: ${read -- versioned}")
+    for (t <- queue.Derived.statusTables)
+      assert(read.exists(_.contains(s"/$t.parquet")), s"$t is versioned but never read")
+  }
+
   test("concurrent first q45 calls build one status rollup; a later call is a hit") {
     val dir = java.nio.file.Files.createTempDirectory("rollup_once").toString
     writeOrders(dir, Seq(1L -> 1L, 2L -> 2L))

@@ -3,11 +3,12 @@
 change checkout, on the same seeds, with the order flipped every pair.
 
   python3 tools/perf_ab.py --parent DIR --change DIR --workload queue-serve \\
-      --seeds 11,12,...,20 [--metric latency_mean_ms] [--seconds 15] [--out FILE]
+      --seeds 11,12,...,20 [--metric latency_mean_ms] [--out FILE]
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds T
---trace 0` once in each checkout (each builds its own sources into its
-own perfbench/.work). Even-numbered pairs run the parent first, odd ones
+--trace 0` once in each checkout, where T is BENCHMARK.json's
+`run_seconds` (each checkout builds its own sources into its own
+perfbench/.work). Even-numbered pairs run the parent first, odd ones
 the change first, so a box that drifts during the set does not favour
 one side. Prints every run's end-to-end values, each side's median and
 quartiles, the change's win count per metric, and the verdict for the
@@ -121,14 +122,12 @@ def main(argv=None):
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="comma-separated seed list")
     ap.add_argument("--metric", help="the claimed end-to-end metric")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--out", help="write every run as JSON here")
     a = ap.parse_args(argv)
     with open(os.path.join(a.parent, "BENCHMARK.json")) as f:
         bench = json.load(f)
     spec = bench["end_to_end"]
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     sides = {"parent": a.parent, "change": a.change}
     runs = []
     for i, seed in enumerate(int(x) for x in a.seeds.split(",")):
