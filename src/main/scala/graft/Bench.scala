@@ -89,7 +89,7 @@ object Bench {
     // warmup: JIT + codegen caches + parquet footers
     qs.foreach { case (name, fn) =>
       run(name, fn)
-      Ckpt.sweep(spark) // free per-query blocks; memo caches are pinned
+      Ckpt.sweep(spark) // free per-query persists; cuts go when unreachable
     }
     // Median-of-N timing (default 3). A single-shot clock on a shared
     // single-JVM box records whatever the GC/JIT/page-cache happened to
@@ -287,8 +287,12 @@ object Bench {
         gcBill(name) = gcBill(name) + (gcMillis() - gc0) / 1e3
       } else failedSet += name
     }
+    // block-manager MB left after the last sweep: memo entries plus
+    // cuts that no GC has yet found unreachable
+    val storedMb = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.memSize + i.diskSize).sum / 1048576.0
     // Memo-pay attribution (VERDICT r14 item 5): drain the SessionCache
-    // ledger and name, ON THE RECORD, which query paid each pinned-memo
+    // ledger and name, ON THE RECORD, which query paid each memo
     // build in which pass. A build whose start precedes wall0 happened
     // in the WARMUP pass (pass 0, query "warmup") — the normal case,
     // since warmup runs every query once and memos pay on first touch —
@@ -377,7 +381,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val memoTotal = memoPays.map(_._5).sum
     val valueCold = total + memoTotal
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","value_cold":$valueCold,"memo_build_s":${r3(memoTotal)},"queries":$qjson,"spread":$sjson,"failed":$fjson,"box":$bjson,"memo_pays":$mjson,"memo_counts":$countsJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","value_cold":$valueCold,"memo_build_s":${r3(memoTotal)},"queries":$qjson,"spread":$sjson,"failed":$fjson,"box":$bjson,"memo_pays":$mjson,"memo_counts":$countsJson,"stored_mb":${r3(storedMb)},"sf":"$sfDir"}"""
     println(json)
     // The driver's BENCH_r*.json keeps only a tail of the stdout line, so
     // early-alphabet queries vanish from the per-round record. Persist the

@@ -2,25 +2,22 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Block-manager hygiene for the long-lived sessions the driver runs
-  * (one JVM, 100+ queries back-to-back, warmup + timed passes).
+/** Lifetimes of materialized blocks in the long-lived sessions the
+  * engine serves (one JVM, many queries and concurrent callers).
   *
-  * `localCheckpoint(eager = true)` blocks are never freed when the
-  * DataFrame goes out of scope, so a full catalog run accumulates every
-  * query's intermediates in the block manager — by mid-run, storage
-  * memory is doing eviction/GC work that gets billed to whichever query
-  * is executing. `sweep()` frees everything between queries, EXCEPT
-  * checkpoints registered through `pinned()` — those back cross-query
-  * memo caches (Dedup's pair set, Graph's edge table) whose lineage is
-  * truncated and therefore cannot be recomputed if their blocks vanish.
+  * The rule is reachability: an eager cut's blocks live while some
+  * frame references the cut, and Spark's `ContextCleaner` (on by
+  * default) unpersists them once nothing does. A result a caller still
+  * holds therefore stays readable whatever other callers do, and a
+  * `SessionCache` memo lives as long as its entry.
+  *  - `free` is the explicit early release for iterative loops that
+  *    supersede a cut every round, so executor storage holds about one
+  *    round's frame instead of waiting for the next GC.
+  *  - `sweep` clears the cache manager's `.persist()` entries, which
+  *    keep full lineage and recompute if read again. It never touches a
+  *    cut.
   */
 object Ckpt {
-  // Pins are scoped by applicationId: a bare rdd-id set would grow
-  // monotonically across sessions, and a stale id from a dead context
-  // could collide with (and wrongly protect) a live context's rdd.
-  private val pinnedIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
   /** THE eager cut — every multi-consumer materialization site routes
     * through here (optimization r20, VERDICT r19 item 5).
     *
@@ -38,10 +35,10 @@ object Ckpt {
     *    executor loss; costs a write+read of the cut frame through the
     *    checkpoint store. The 100 TB default for long jobs on
     *    preemptible capacity.
-    * Both modes yield a LogicalRDD-backed frame, so `pinned`/`free`/
-    * `sweep` work identically (a reliable-checkpoint RDD's unpersist is
-    * a no-op; its files are reaped with the checkpoint dir). Callers
-    * chain it as `.transform(graft.Ckpt.cut)`. */
+    * Both modes yield a LogicalRDD-backed frame, so `free` and the
+    * context cleaner work identically (a reliable-checkpoint RDD's
+    * unpersist is a no-op; its files are reaped with the checkpoint
+    * dir). Callers chain it as `.transform(graft.Ckpt.cut)`. */
   def cut(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     s.conf.getOption("spark.graft.ckpt.mode").map(_.trim).getOrElse("local") match {
@@ -58,29 +55,6 @@ object Ckpt {
     }
   }
 
-  /** Eager cut whose blocks survive `sweep` — use ONLY for
-    * DataFrames memoized across queries.
-    *
-    * Pins by the checkpointed DataFrame's OWN rdd id, read off its plan
-    * ([[rddOf]]). (The previous implementation diffed
-    * `getPersistentRDDs` around the call, which permanently pinned any
-    * `.persist()` issued by a concurrent thread during the window.) */
-  def pinned(df: DataFrame): DataFrame = {
-    val out = cut(df)
-    val rdd = rddOf(out).getOrElse(throw new IllegalStateException(
-      "Ckpt.pinned: expected a LogicalRDD plan from localCheckpoint, got " +
-        out.queryExecution.analyzed.getClass.getName))
-    pinnedIds.add((rdd.context.applicationId, rdd.id))
-    out
-  }
-
-  /** Release a `pinned` frame the way a per-request cut is released:
-    * its blocks stay readable (a reader in flight keeps working) until
-    * the next `sweep` or the context cleaner frees them. No-op on a
-    * frame that is not pinned. */
-  def unpin(df: DataFrame): Unit =
-    rddOf(df).foreach(r => pinnedIds.remove((r.context.applicationId, r.id)))
-
   /** The persisted RDD behind a checkpointed frame: `localCheckpoint`
     * returns a Dataset whose analyzed plan is the `LogicalRDD` wrapping
     * exactly that RDD. `LogicalRDD.rdd` is `private[sql]`, which erases
@@ -96,22 +70,11 @@ object Ckpt {
   /** Free one localCheckpoint's blocks NOW — for iterative fixpoints
     * that supersede a checkpointed table every round: without this, a
     * k-round loop holds k full table copies in executor storage until
-    * the post-query sweep. No-op on non-checkpoint plans. */
+    * the next GC. No-op on non-checkpoint plans. */
   def free(df: DataFrame): Unit = rddOf(df).foreach(_.unpersist(false))
 
-  /** Free all persisted blocks except pinned ones. Dataset-level caches
-    * (`.persist()`) are cleared via the cache manager first — those have
-    * full lineage and recompute gracefully if ever re-used; truncated
-    * localCheckpoint RDDs are unpersisted only when not pinned. */
-  def sweep(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    val app = spark.sparkContext.applicationId
-    val live = spark.sparkContext.getPersistentRDDs
-    live.foreach { case (id, rdd) =>
-      if (!pinnedIds.contains((app, id))) rdd.unpersist(blocking = false)
-    }
-    // prune pins whose blocks are gone (unpersisted elsewhere, or from
-    // this app's earlier life) so the set stays bounded by live pins
-    pinnedIds.removeIf(p => p._1 == app && !live.contains(p._2))
-  }
+  /** Clear the session's cache manager (every `.persist()`ed frame).
+    * Cuts are left to reachability, so a result another caller holds
+    * stays readable. */
+  def sweep(spark: SparkSession): Unit = spark.catalog.clearCache()
 }

@@ -27,14 +27,12 @@ import org.apache.spark.sql.SparkSession
   * Input version: a caller whose inputs can change passes `version`
   * (e.g. [[Tables.version]] of the files the build reads). An entry
   * answers only lookups with an equal version; a lookup with another
-  * version builds a new value and replaces the entry, and the
-  * superseded value is handed to `release` once it is built. `release`
-  * may run twice on one value, so it must be idempotent; for
-  * `Ckpt.pinned` values pass `graft.Ckpt.unpin`, which leaves the blocks
-  * readable by requests still in flight until the next sweep.
+  * version builds a new value and replaces the entry. Nothing releases
+  * the superseded value: a request in flight that holds it keeps
+  * reading it, and once nothing references it the context cleaner
+  * frees its blocks (see [[Ckpt]]).
   */
-final class SessionCache[V >: Null](label: String = "",
-                                    release: V => Unit = (_: V) => ()) {
+final class SessionCache[V >: Null](label: String = "") {
   private val m =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SessionCache.Entry[V]]()
   private val counts = SessionCache.countsOf(label)
@@ -68,11 +66,7 @@ final class SessionCache[V >: Null](label: String = "",
       if (!won) lookup(k, build, version)
       else {
         counts.misses.increment()
-        if (cur != null) {
-          counts.superseded.increment()
-          // a superseded build still in flight releases its own value
-          cur.value.future.value.foreach(_.foreach(release))
-        }
+        if (cur != null) counts.superseded.increment()
         run(k, mine, build)
       }
     }
@@ -109,9 +103,6 @@ final class SessionCache[V >: Null](label: String = "",
     SessionCache.recordPay(label, t0, gross - SessionCache.childSecs.get())
     SessionCache.childSecs.set(saved + gross)
     mine.value.success(v)
-    // superseded while building: its callers still get `v`, but no
-    // later lookup will, so release it (the replacer may have too)
-    if (m.get(k) ne mine) release(v)
     v
   }
 }

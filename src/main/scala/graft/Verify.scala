@@ -29,7 +29,7 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        Ckpt.sweep(spark) // free per-query blocks; memo caches are pinned
+        Ckpt.sweep(spark) // free per-query persists; cuts go when unreachable
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -50,9 +50,9 @@ object Dedup {
     * q165 (source-overlap matrix) and q189 (split leakage) each paid
     * the identical build independently. Same shared-intermediate idiom
     * as [[q105DedupClusters]]'s pair cache and the graph edge cache:
-    * SessionCache + Ckpt.pinned so the blocks survive the Bench/Verify
-    * between-query sweep. The production shape is the same decision —
-    * a curation pipeline explodes the corpus's shingles once and every
+    * SessionCache + Ckpt.cut, so the blocks live as long as the entry.
+    * The production shape is the same decision — a curation pipeline
+    * explodes the corpus's shingles once and every
     * census reads that table; doc-level attributes (source here, q189's
     * split = f(doc_id)) ride along or derive map-side so no consumer
     * re-joins the corpus. Per-doc shingle ARRAYS (q34/q46's verify
@@ -63,7 +63,7 @@ object Dedup {
   def docShingles(s: SparkSession, dir: String): DataFrame =
     docShCache.getOrElseUpdate(s, dir, {
       import s.implicits._
-      graft.Ckpt.pinned(
+      graft.Ckpt.cut(
         Tables.documents(s, dir)
           .select($"doc_id", $"source",
             explode(shingles(TextOps.tokens($"text"))).as("sh")))
@@ -911,19 +911,13 @@ object Dedup {
     import s.implicits._
     clusterCache.getOrElseUpdate(s, dir, {
       val pairs = pairCache.getOrElseUpdate(s, dir,
-        graft.Ckpt.pinned(
+        graft.Ckpt.cut(
           TextOps.q34JaccardPairs(s, dir).select($"id1", $"id2")))
       val edges = pairs.select($"id1".as("src"), $"id2".as("dst"))
         .union(pairs.select($"id2".as("src"), $"id1".as("dst")))
       val nodes = Tables.documents(s, dir).select($"doc_id")
-      // minLabelComponents already returns an eager localCheckpoint;
-      // pinned() makes the durable copy, so free the loop's final
-      // (unpinned) one immediately — otherwise two full label tables
-      // sit in executor storage until the next sweep
-      val labels = minLabelComponents(nodes, edges)
-      val out = graft.Ckpt.pinned(labels)
-      graft.Ckpt.free(labels)
-      out
+      // the loop's last round is already an eager cut: memoize it
+      minLabelComponents(nodes, edges)
     }).orderBy($"doc_id")
   }
 
@@ -940,7 +934,7 @@ object Dedup {
   def q246CcTwostar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = pairCache.getOrElseUpdate(s, dir,
-      graft.Ckpt.pinned(
+      graft.Ckpt.cut(
         TextOps.q34JaccardPairs(s, dir).select($"id1", $"id2")))
     val nodes = Tables.documents(s, dir).select($"doc_id")
     twoStarComponents(nodes,
@@ -1062,9 +1056,9 @@ object Dedup {
     val sh = toks(s, dir)
       .filter($"doc_id" % 2 === 0)
       .select($"doc_id", shingles($"toks").as("sh"))
-      .transform(graft.Ckpt.cut) // EAGER (q260's pattern); swept per-query (Ckpt.sweep)
+      .transform(graft.Ckpt.cut) // EAGER (q260's pattern)
     val banded = md5Bands(sh)
-      .transform(graft.Ckpt.cut) // widths + both salted-join sides; swept per-query
+      .transform(graft.Ckpt.cut) // widths + both salted-join sides
     verifyJaccard(saltedPairs(banded, maxWidth = 1), sh, 0.5)
       .orderBy($"id1", $"id2")
   }
@@ -1215,7 +1209,7 @@ object Dedup {
       .select($"doc_id", shingles($"toks").as("sh"))
       // EAGER cut (optimization r19, q260's pattern): a lazy persist
       // lets the banding and verify subtrees race the empty cache
-      .transform(graft.Ckpt.cut) // signature pass + both verify sides; swept per-query
+      .transform(graft.Ckpt.cut) // signature pass + both verify sides
     // feed instrumentation (VERDICT r16 item 3): candidate and verified
     // pair counts ride the pass as observe metrics, so decade rows can
     // state runtime-vs-CANDIDATES, measured — not argued from stages
@@ -1306,7 +1300,7 @@ object Dedup {
   def q255CcSalted(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sh = saltedBudgetShingles(s, dir)
-      .transform(graft.Ckpt.cut) // EAGER (q260's pattern); swept per-query
+      .transform(graft.Ckpt.cut) // EAGER (q260's pattern)
     val banded = md5Bands(sh).transform(graft.Ckpt.cut) // widths + both salted-join sides
     val pairs = verifyJaccard(saltedPairs(banded, maxWidth = 4), sh, 0.5)
     val nodes = sh.select($"doc_id").distinct()
@@ -1353,7 +1347,7 @@ object Dedup {
     // as the same ~0.4 s stage executing 4x inside one run
     val sh = toks(s, dir)
       .select($"doc_id", shingles($"toks").as("sh"))
-      .transform(graft.Ckpt.cut) // signature pass + verify sides; swept per-query
+      .transform(graft.Ckpt.cut) // signature pass + verify sides
     val banded = md5Bands(sh).transform(graft.Ckpt.cut) // widths + both salted-join sides
     // same feed instrumentation as q252 — the decade rows' denominator
     val pairs = verifyJaccard(
@@ -1636,7 +1630,7 @@ object Dedup {
       .toDF("doc_id", "off", "sh")
       .select($"doc_id", ($"off" + 1).cast("long").as("pos"), $"sh")
       // EAGER cut + spread (optimization r19, q260/q243's pattern)
-      .transform(graft.Ckpt.cut) // read twice; swept per-query
+      .transform(graft.Ckpt.cut) // read twice
     val dup = spans.groupBy($"sh")
       .agg(countDistinct($"doc_id").as("nd"))
       .filter($"nd" >= 2).select($"sh")
@@ -1750,7 +1744,7 @@ object Dedup {
       // EAGER cut (optimization r19, q260's pattern): the dup census and
       // the join back race a lazy cache and rebuild the window table
       // twice (profiled as twin ~780 ms stages in q243)
-      .transform(graft.Ckpt.cut) // read twice; swept per-query
+      .transform(graft.Ckpt.cut) // read twice
     val dup = spans.groupBy($"k")
       .agg(countDistinct($"doc_id").as("nd"))
       .filter($"nd" >= 2).select($"k")

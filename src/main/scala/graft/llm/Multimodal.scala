@@ -633,9 +633,9 @@ object Multimodal {
         identity): DataFrame = {
     val s = sigs.sparkSession
     import s.implicits._
-    // persisted: BOTH band-join sides scan it, and since r17 it carries
-    // the widths pre-aggregate + broadcast (counting its drops) — one
-    // evaluation, not two (swept per-query like the caller's sigs)
+    // cut: BOTH band-join sides scan it, and since r17 it carries the
+    // widths pre-aggregate + broadcast (counting its drops) — one
+    // evaluation, not two
     val chunked = phashChunked(sigs).transform(graft.Ckpt.cut) // EAGER (r19)
     val a = chunked.select($"media_id".as("id1"), $"v0".as("x0"), $"v1".as("x1"),
       $"v2".as("x2"), $"v3".as("x3"), $"c", $"v")
@@ -1030,13 +1030,13 @@ object Multimodal {
     * queries consume its 8-byte-per-frame output (q257 dedup, q263
     * alignment). A production pipeline computes the signature table
     * once and runs every downstream consumer off it; the memo is that
-    * artifact (pinned LogicalRDD — survives per-query sweeps). */
+    * artifact (an eager cut that lives as long as its entry). */
   private val videoSigsCache =
     new graft.SessionCache[DataFrame]("video_sigs")
 
   private def cachedVideoSigs(s: SparkSession, dir: String): DataFrame =
     videoSigsCache.getOrElseUpdate(s, dir,
-      graft.Ckpt.pinned(videoSigs(videoTable(s, dir))))
+      graft.Ckpt.cut(videoSigs(videoTable(s, dir))))
 
   /** q263's production operator on an arbitrary media table — pinned
     * in MultimodalSpec: a trimmed copy aligns (max_run = kept length

@@ -307,44 +307,43 @@ object Pipeline {
     * (q276) and the survivor mixture (q280).
     *
     * Optimization r19: the shared frames are materialized EAGERLY
-    * (`mat`, default eager localCheckpoint). With the pre-r19 lazy
-    * persist the census's five union branches raced the empty cache and
-    * recomputed the shared lineage — profiled as the same stage shape
-    * executing 2–4x back to back inside one q280 run — and the final
+    * (`Ckpt.cut`). With the pre-r19 lazy persist the census's five
+    * union branches raced the empty cache and recomputed the shared
+    * lineage — profiled as the same stage shape executing 2–4x back
+    * to back inside one q280 run — and the final
     * plan carried 232 Exchange nodes (336 KB formatted) because every
     * consumer re-embedded the whole funnel lineage. Eager cuts run each
     * stage exactly once and truncate the plan. The doc scan is also
     * spread once at entry (Tables.spread): the md5/simhash/13-gram work
     * above the single-split scan otherwise runs single-threaded. */
-  private def funnelStages(docs0: DataFrame, enc: DataFrame,
-      mat: DataFrame => DataFrame = _.transform(graft.Ckpt.cut))
+  private def funnelStages(docs0: DataFrame, enc: DataFrame)
       : (DataFrame, Seq[(Int, String, DataFrame)]) = {
     val s = docs0.sparkSession
     import s.implicits._
     val docs = graft.Tables.spread(docs0, "doc_id")
     // s0 is materialized too: in the memoized form every stage frame,
     // including the raw id census, is a readable artifact
-    val s0 = mat(docs.select($"doc_id"))
-    val stats = mat(docs
+    val s0 = graft.Ckpt.cut(docs.select($"doc_id"))
+    val stats = graft.Ckpt.cut(docs
       .select($"doc_id", explode(TextOps.tokens($"text")).as("w"))
       .join(enc.select($"w", size($"syms").as("ns")), Seq("w"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tok"), sum($"ns".cast("long")).as("n_ids")))
-    val s1 = mat(docs.groupBy(md5($"text").as("h"))
+    val s1 = graft.Ckpt.cut(docs.groupBy(md5($"text").as("h"))
       .agg(min($"doc_id").as("doc_id")).select($"doc_id"))
-    val s2 = mat(s1.join(TextOps.gopherRulesFrom(docs)
+    val s2 = graft.Ckpt.cut(s1.join(TextOps.gopherRulesFrom(docs)
         .filter($"gopher_pass").select($"doc_id"), Seq("doc_id")))
     val docs2 = docs.join(s2, Seq("doc_id"))
     val drop3 = Dedup.simhashMd5PairsFromToks(
         docs2.select($"doc_id", explode(TextOps.tokens($"text")).as("tok")))
       .select($"id2".as("doc_id")).distinct()
-    val s3 = mat(s2.join(drop3, Seq("doc_id"), "left_anti"))
+    val s3 = graft.Ckpt.cut(s2.join(drop3, Seq("doc_id"), "left_anti"))
     val bench = TextOps.gramWindows(docs.filter($"source" === "src0"))
       .select($"g").distinct()
     val docs3 = docs.join(s3, Seq("doc_id"))
     val contaminated = TextOps.gramWindows(docs3.filter($"source" =!= "src0"))
       .join(bench, Seq("g")).select($"doc_id").distinct()
-    val s4 = mat(s3
+    val s4 = graft.Ckpt.cut(s3
       .join(docs.select($"doc_id", $"source"), Seq("doc_id"))
       .filter($"source" =!= "src0").select($"doc_id")
       .join(contaminated, Seq("doc_id"), "left_anti"))
@@ -356,16 +355,15 @@ object Pipeline {
     * the videoSigs/q257+q263 production-artifact discipline applied to
     * the funnel: a curation run derives the survivor sets ONCE and both
     * the census (q276) and the mixture allocation (q280) read that
-    * artifact. Pinned so the blocks survive the per-query sweep; the
-    * build is attributed on the bench's memo_pays ledger. */
+    * artifact. Its cuts live as long as the entry; the build is
+    * attributed on the bench's memo_pays ledger. */
   private val funnelCache =
     new graft.SessionCache[(DataFrame, Seq[(Int, String, DataFrame)])]("funnel_stages")
 
   private def funnelArtifacts(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, DataFrame)]) =
     funnelCache.getOrElseUpdate(s, dir,
-      funnelStages(Tables.documents(s, dir), TextOps.vocab16(s, dir),
-        mat = graft.Ckpt.pinned))
+      funnelStages(Tables.documents(s, dir), TextOps.vocab16(s, dir)))
 
   /** q280: the FUNNEL → MIXTURE handoff — what a run actually
     * allocates after curation: q276's decontaminated survivors,

@@ -452,14 +452,14 @@ object Similarity {
     val s = e.sparkSession
     import s.implicits._
     // seed + sampled-Lloyd refine: the SAME build as q66's. Eagerly
-    // checkpointed (K ≈ √N rows — trivial blocks, swept per query):
+    // checkpointed (K ≈ √N rows — trivial blocks):
     // five consumers read it (supers rank, centroid→super, the
     // occupied-set collect, vector assignment, query probes), and
     // without truncation each re-runs the whole Lloyd chain — the r17
     // occupied-supers guard made that visible by adding a consumer
     // (gate flag 2.46→3.9 s; with the checkpoint the guard is free).
-    // centsIn: the shared corpus-cents artifact (already a pinned
-    // checkpoint) when the caller is the registered full-corpus query.
+    // centsIn: the shared corpus-cents artifact (already a memoized
+    // cut) when the caller is the registered full-corpus query.
     val cents = centsIn.getOrElse(
       sampledLloydCents(e, strideMod, lloydIters).transform(graft.Ckpt.cut))
     // coarse quantizer: G = max(1, ⌊√K⌋) supers = every ⌈K/G⌉-th
@@ -666,7 +666,7 @@ object Similarity {
                             tau: Double, lloydIters: Int): DataFrame =
     // the K-row index is read twice by the assignment (cells broadcast
     // + reps broadcast) — eager-cut so the store-side build runs once
-    // (optimization r20; swept per-query by Ckpt.sweep)
+    // (optimization r20)
     semAssignFrom(semIndexFrom(store, lloydIters).transform(graft.Ckpt.cut),
       batch, tau)
 
@@ -896,15 +896,15 @@ object Similarity {
 
   /** The grown store both compaction grades rebuild from: the fixture
     * (v1) assignment's batch survivors unioned onto the store split.
-    * Session-memoized pinned checkpoint (optimization r19): q250 AND
+    * Session-memoized eager cut (optimization r19): q250 AND
     * q254 rebuild from the SAME grown store, and within each query the
     * rebuild consumes it from several subtrees (the sizing count, the
     * seed and train slices, the full assignment, the rep join) — un-cut,
     * every consumer re-ran the fixture assignment + survivor join. One
     * build per session+dir, attributed on memo_pays. */
-  /** Resident footprint (ADVICE r19, low): the pinned grown store is
-    * corpus-scale (~3/4 of vecs + survivors) and survives per-query
-    * sweeps for the session's lifetime, ONCE PER (dir, tau) touched —
+  /** Resident footprint (ADVICE r19, low): the memoized grown store is
+    * corpus-scale (~3/4 of vecs + survivors) and its entry holds it for
+    * the session's lifetime, ONCE PER (dir, tau) touched —
     * a scaling study iterating several dirs in one session holds one
     * such checkpoint per dir (~N×65 doubles each; ~2.6 MB at sf0.1).
     * Bounded by the study's dir list; a new session starts clean. */
@@ -917,7 +917,7 @@ object Similarity {
     // knob change served q250/q254 a stale grown store while their
     // oracles were synthesized at the new tau (silent wrong results)
     grownStoreCache.getOrElseUpdate(s, s"$dir#tau=${sessionSemdedupTau(s)}",
-      graft.Ckpt.pinned(compactionGrownStoreBuild(s, dir)))
+      graft.Ckpt.cut(compactionGrownStoreBuild(s, dir)))
 
   private def compactionGrownStoreBuild(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1205,7 +1205,7 @@ object Similarity {
     * builds and q265/q278 one each (profiled: 101 driver jobs, the
     * embeddings scan re-read 8×). A production pipeline builds each
     * index once and runs every evaluation off it; the memo is that
-    * artifact — pinned LogicalRDD (survives per-query Ckpt.sweep; built
+    * artifact — an eager cut that lives as long as its entry (built
     * once per key even under concurrent first calls), attributed on
     * the bench's memo_pays ledger, keyed by (session, dir # name) so
     * scaled-study dirs never collide. */
@@ -1215,7 +1215,7 @@ object Similarity {
   private def annArtifact(s: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
     annShortlistCache.getOrElseUpdate(s, dir + "#" + name,
-      graft.Ckpt.pinned(build))
+      graft.Ckpt.cut(build))
 
   /** The full-corpus coarse quantizer as a shared artifact
     * (optimization r19): q66/q132/q229/q267/q269/q277 all refine the
@@ -1424,7 +1424,7 @@ object Similarity {
     // builds and the brute ground truth come from the memo — one build
     // per session+dir. The old lazy `.persist()` on brute additionally
     // raced all four union branches into re-computing it (the q260
-    // pattern); the pinned checkpoint is materialized once, race-free.
+    // pattern); the memoized cut is materialized once, race-free.
     val brute = annArtifact(s, dir, "brute")(q36CosineTopk(s, dir))
       .select($"qid", $"cid")
     // knob-keyed artifact names (ADVICE r19): ivf2 reads the session's

@@ -1401,7 +1401,7 @@ object TextOps {
   /** Cross-query memo of the k=16 int-form training artifacts per
     * (session, dir) — the mergeCache discipline, now holding BOTH
     * outputs of one training run: the 16-row merge table (q259 grades
-    * it) and the PINNED encoded vocabulary (q261 joins it). */
+    * it) and the cut encoded vocabulary (q261 joins it). */
   private val mergeCache16 =
     new graft.SessionCache[(Vector[(Int, Int, Long, String, String, String, Long)],
       DataFrame)]("bpe_merges16")
@@ -1409,10 +1409,8 @@ object TextOps {
   private def cachedInt16(s: SparkSession, dir: String)
       : (Vector[(Int, Int, Long, String, String, String, Long)], DataFrame) =
     mergeCache16.getOrElseUpdate(s, dir, {
-      val (m, vocab) = bpeTrainIntWithVocab(Tables.documents(s, dir), k = 16)
-      val pinnedVocab = graft.Ckpt.pinned(vocab) // survives per-query sweeps
-      graft.Ckpt.free(vocab)
-      (m, pinnedVocab)
+      // the vocabulary is the loop's last round, already an eager cut
+      bpeTrainIntWithVocab(Tables.documents(s, dir), k = 16)
     })
 
   /** The cached k=16 encoded vocabulary (w, syms, wc) — the
@@ -2431,7 +2429,7 @@ object TextOps {
     // on a lazy cache — each miss re-read the 30 MB docShingles memo
     // blocks single-task and re-ran the distinct
     val sh = docSh.select($"split", $"sh").distinct()
-      .transform(graft.Ckpt.cut) // totals + intersection sides + leak probe; swept per-query
+      .transform(graft.Ckpt.cut) // totals + intersection sides + leak probe
     val tot = sh.groupBy($"split").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"),
         $"a.sh" === $"b.sh" && $"a.split" < $"b.split")

@@ -28,7 +28,7 @@ import graft.model.{PhaseStatus, ToolEvent}
   * file key exactly like the production `QueueOps.interPlanDeps`, and
   * scoped to a project so one hot file doesn't couple every plan pair.
   *
-  * Serving: q43 and q45 are projections of one pinned status rollup
+  * Serving: q43 and q45 are projections of one memoized status rollup
   * per (session, dir, input version) ([[statusRollup]]), so a dashboard
   * poll reads one row per plan instead of re-joining `lineitem ⋈
   * orders`; the other entries compute per request.
@@ -257,19 +257,20 @@ object Derived {
       |       CAST(least(greatest(raw, 1), 5) AS INT) AS priority
       |FROM prio ORDER BY priority, created_at, id LIMIT 1""".stripMargin
 
-  private val rollups = new graft.SessionCache[DataFrame]("status_rollup", graft.Ckpt.unpin)
+  private val rollups = new graft.SessionCache[DataFrame]("status_rollup")
 
   /** The per-(project, plan) status rollup of `dir` with all ten of
-    * its aggregates (`QueueOps.statusRollup` over [[statuses]]), pinned
+    * its aggregates (`QueueOps.statusRollup` over [[statuses]]), cut
     * once per (session, dir, input version) and shared by q43 and q45
     * — the reference reuses one pulse snapshot instead of rescanning
     * (S17, `commands/pulse.md:84-93`). The version is the (path,
     * length, mtime) of every file of [[statusTables]], computed on
-    * every call, so a rewritten table is read on the next request; the
-    * superseded memo is unpinned and freed by the next sweep. */
+    * every call, so a rewritten table is read on the next request; a
+    * superseded memo stays readable while a request holds it and is
+    * freed by the context cleaner once none does. */
   def statusRollup(s: SparkSession, dir: String): DataFrame =
     rollups.getOrElseUpdate(s, dir,
-      graft.Ckpt.pinned(QueueOps.statusRollup(statuses(s, dir))),
+      graft.Ckpt.cut(QueueOps.statusRollup(statuses(s, dir))),
       version = Tables.version(s, dir, statusTables: _*))
 
   /** q43 — status overview with ETA (S18/S19) over the derived status

@@ -56,7 +56,7 @@ object Graph {
       // this aggregate (profiled: the star-join stage shape executing
       // twice per run). One cut here truncates every consumer's
       // lineage to a ≤625-row LogicalRDD; the downstream re-aggs are
-      // trivial. Swept per-query by Ckpt.sweep.
+      // trivial.
       .transform(graft.Ckpt.cut)
     val outw = edges.groupBy($"src").agg(sum($"w").as("outw"))
     val shares = edges.join(outw, "src")
@@ -204,8 +204,8 @@ object Graph {
     * (r13): q155 and q161 derive the IDENTICAL edges from the identical
     * presence table — the same shared-intermediate shape as Dedup's
     * pair cache (q34 feeding q105), memoized the same way (SessionCache
-    * + Ckpt.pinned so the blocks survive the Bench/Verify between-query
-    * sweep). A production pipeline computing
+    * + Ckpt.cut, so the blocks live as long as the entry). A production
+    * pipeline computing
     * both graph metrics shares the edge build; so do we — ~2.3 s of the
     * two queries' ~4 s each was this build, paid twice. */
   private val edgeCache =
@@ -218,7 +218,7 @@ object Graph {
         .select($"user_id", $"event_type", date_trunc("hour", $"ts").as("hr"))
         .distinct()
       val e = coVisitEdges(b, minW = 3)
-      val out = graft.Ckpt.pinned(e)
+      val out = graft.Ckpt.cut(e)
       // consumers read the checkpoint, so the observe node only ever
       // executes HERE — report its drop counters or the cap goes silent
       graft.llm.DropMetrics.reportNow(e)

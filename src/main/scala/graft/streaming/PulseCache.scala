@@ -13,8 +13,8 @@ import graft.model.PhaseStatus
   * `queue.QueueOps.pulse` of the status rollup) is persisted on first
   * compute (so reuse is a cache read, not a re-aggregation) and
   * invalidated when the TTL lapses — the stale copy is unpersisted to
-  * release executor memory. `Ckpt.sweep` clears the session's whole
-  * cache manager, so it also unpersists this copy before its TTL
+  * release executor memory. `Ckpt.sweep` is the session's
+  * `clearCache`, so it also unpersists this copy before its TTL
   * lapses. The clock is injectable so the stale/fresh branches are
   * unit-testable without sleeping.
   *

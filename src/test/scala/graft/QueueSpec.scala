@@ -178,28 +178,34 @@ class QueueSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     def pulse() = byPlan(queue.Derived.q45Pulse(spark, dir))
     def overview() = byPlan(queue.Derived.q43StatusOverview(spark, dir))
-    val memos = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    // the memos' rdd ids, not the frames: holding a frame keeps its blocks
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def memo(): Unit = ids += Ckpt.rddOf(queue.Derived.statusRollup(spark, dir)).get.id
     writeOrders(dir, Seq(1L -> 1L, 2L -> 2L))
     writeLines(dir, Seq((1L, 1, "F", "N"), (1L, 2, "O", "N"), (2L, 1, "F", "N")))
     assert(pulse()("1").getAs[Long]("n_completed") == 1)
     assert(overview()("1").getAs[Long]("n_completed") == 1)
-    memos += queue.Derived.statusRollup(spark, dir)
+    memo()
     // plan 1's second phase completes
     writeLines(dir, Seq((1L, 1, "F", "N"), (1L, 2, "F", "N"), (2L, 1, "F", "N")))
     assert(pulse()("1").getAs[Long]("n_completed") == 2)
     assert(overview()("1").getAs[Long]("n_completed") == 2)
-    memos += queue.Derived.statusRollup(spark, dir)
+    memo()
     // plan 2 moves from proj_2 to proj_3
     writeOrders(dir, Seq(1L -> 1L, 2L -> 3L))
     assert(pulse()("2").getAs[String]("project") == "proj_3")
     assert(overview()("2").getAs[String]("project") == "proj_3")
-    memos += queue.Derived.statusRollup(spark, dir)
-    // one rollup per version; after a sweep only the current one is left
-    Ckpt.sweep(spark)
-    val ids = memos.map(m => Ckpt.rddOf(m).get.id).toSeq
+    memo()
+    // one rollup per version; once nothing references the superseded
+    // ones, the context cleaner frees them and only the current is left
     assert(ids.distinct.size == 3, s"one rollup per input version: $ids")
-    val live = sc.getPersistentRDDs.keySet
-    assert(ids.filter(live) == Seq(ids.last), s"live rollups ${ids.filter(live)} of $ids")
+    def live() = ids.filter(sc.getPersistentRDDs.contains).toSeq
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (live() != Seq(ids.last) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(live() == Seq(ids.last), s"live rollups ${live()} of $ids")
   }
 
   test("the status rollup's input version covers every file the statuses read") {
@@ -343,8 +349,8 @@ class StratifySpec extends AnyFunSuite {
     // sees only what they leave
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
-    // q43 and q45 may leave exactly one block: the pinned status rollup
-    // memo of (spark, sf), which an earlier suite may already have built
+    // q43 and q45 may leave exactly one block: the status rollup memo of
+    // (spark, sf), which an earlier suite may already have built
     def memo() = Ckpt.rddOf(queue.Derived.statusRollup(spark, sf)).get.id
     val rollupEntries = Set("q43_status_overview", "q45_pulse")
     var allowed = Set.empty[Int]
@@ -366,10 +372,11 @@ class StratifySpec extends AnyFunSuite {
       java.lang.ref.Reference.reachabilityFence(df)
     }
     assert(cache.isEmpty, "the cache manager holds plans the queries left behind")
-    // the memo is pinned: a sweep keeps it and frees nothing else of theirs
+    // the memo's entry holds it, so a sweep keeps it; nothing else of
+    // theirs is left
     Ckpt.sweep(spark)
     val after = sc.getPersistentRDDs.keySet
-    assert(after.contains(memo()), "the sweep freed the pinned rollup memo")
+    assert(after.contains(memo()), "the sweep freed the rollup memo its entry holds")
     assert((after -- before).subsetOf(Set(memo())), s"left after a sweep: ${after -- before}")
   }
 

@@ -164,33 +164,31 @@ class RobustnessSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("unsupported source type"))
   }
 
-  test("Ckpt.pinned survives sweep; concurrent un-pinned checkpoints do not leak into the pin set") {
-    import spark.implicits._
-    val sc = spark.sparkContext
+  test("a cut a SessionCache entry holds survives sweep and GC") {
+    val cache = new SessionCache[org.apache.spark.sql.DataFrame]("rbt_held")
+    def held() = cache.getOrElseUpdate(spark, "k", Ckpt.cut(spark.range(123).toDF("y")))
+    val id = Ckpt.rddOf(held()).get.id
     Ckpt.sweep(spark)
-    val base = sc.getPersistentRDDs.keySet // pins from other specs
-    // another thread continuously takes UN-pinned local checkpoints —
-    // under the old before/after-diff implementation any of these
-    // landing inside pinned()'s window was pinned forever
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val churner = new Thread(() => {
-      while (!stop.get()) spark.range(50).toDF("x").localCheckpoint(true)
-    })
-    churner.setDaemon(true)
-    churner.start()
-    val pinnedDfs = (1 to 8).map(i => Ckpt.pinned(spark.range(100L + i).toDF("y")))
-    stop.set(true)
-    churner.join(30000)
-    Ckpt.sweep(spark)
-    val after = sc.getPersistentRDDs.keySet
-    assert((after -- base).size == pinnedDfs.size,
-      s"sweep left ${(after -- base).size} new blocks for ${pinnedDfs.size} pins — " +
-        "a concurrent checkpoint leaked into the pin set")
-    // pinned data stays readable after the sweep (lineage is truncated,
-    // so the blocks must really be there)
-    pinnedDfs.zipWithIndex.foreach { case (df, i) =>
-      assert(df.count() == 100L + (i + 1))
+    // the entry is the only reference, so GCs leave the blocks alone
+    for (_ <- 1 to 5) { System.gc(); Thread.sleep(100) }
+    assert(spark.sparkContext.getPersistentRDDs.contains(id),
+      "the cleaner freed a cut its memo entry still holds")
+    // lineage is truncated, so the rows come from the blocks themselves
+    assert(held().count() == 123L)
+    assert(Ckpt.rddOf(held()).get.id == id, "the memo was rebuilt")
+  }
+
+  test("a dropped cut leaves the block manager within a bounded GC-and-poll loop") {
+    def dropped(): Int = Ckpt.rddOf(Ckpt.cut(spark.range(77).toDF("z"))).get.id
+    val id = dropped()
+    // the context cleaner frees an unreachable RDD after a GC finds it
+    def live = spark.sparkContext.getPersistentRDDs.contains(id)
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (live && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
     }
+    assert(!live, s"rdd $id still persisted 10 s after its frame became unreachable")
   }
 
   test("incremental SemDeDup tolerates an EMPTY ingest batch (quiet night, not a crash)") {
