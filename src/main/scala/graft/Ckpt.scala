@@ -36,9 +36,14 @@ object Ckpt {
     *    checkpoint store. The 100 TB default for long jobs on
     *    preemptible capacity.
     * Both modes yield a LogicalRDD-backed frame, so `free` and the
-    * context cleaner work identically (a reliable-checkpoint RDD's
-    * unpersist is a no-op; its files are reaped with the checkpoint
-    * dir). Callers chain it as `.transform(graft.Ckpt.cut)`. */
+    * context cleaner work identically on its blocks. A reliable-mode
+    * cut's FILES are another matter: a reliable-checkpoint RDD's
+    * unpersist is a no-op, and Spark registers checkpoint files with
+    * the context cleaner only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` (default
+    * false, and no session here sets it), so the files outlive
+    * reachability until the checkpoint directory is removed. Callers
+    * chain it as `.transform(graft.Ckpt.cut)`. */
   def cut(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     s.conf.getOption("spark.graft.ckpt.mode").map(_.trim).getOrElse("local") match {

@@ -1367,11 +1367,11 @@ object TextOps {
     * points) and merge t MINTS the fresh integer id BpeSymBase+t —
     * rounds are bounded by the vocabulary target, not the alphabet.
     *
-    * Same plan shape as q251 (the anchor, kept registered): per round
-    * one explode + hash aggregation over the DISTINCT word table, a
-    * 1-row argmax collect, one map-side apply; merge table as
-    * driver-resident model state with persist rotation and
-    * exception-safe unpersist. The apply step is a left-to-right fold
+    * Trained by [[bpeTrainInt]], the one int-form loop (q264 runs it
+    * to 64): per census round one explode + hash aggregation over the
+    * DISTINCT word table, a top-T collect, one map-side apply of the
+    * batch; merge table as driver-resident model state with eager-cut
+    * rotation and exception-safe free. The apply step is a left-to-right fold
     * (`aggregate`): a pair (l, r) at the array tail of the
     * accumulator collapses to the minted id — non-overlapping
     * left-to-right, EXACTLY `replace`'s semantics (the minted id is
@@ -1389,14 +1389,8 @@ object TextOps {
     * tables, q244's DuckDB lesson) with the apply fold restated as
     * `list_reduce` over 1-int lists — bit-identical fold semantics,
     * verified against the same pair/argmax/total arithmetic. */
-  def q259BpeTrain16(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    cachedInt16(s, dir)._1
-      .zipWithIndex.map { case ((_, _, cnt, ls, rs, m, syms), j) =>
-        (j + 1, ls, rs, m, cnt, syms)
-      }.toDF("round", "left_sym", "right_sym", "merged", "pair_count", "corpus_syms")
-      .orderBy($"round")
-  }
+  def q259BpeTrain16(s: SparkSession, dir: String): DataFrame =
+    bpeMergeRows(s, cachedInt16(s, dir)._1)
 
   /** Cross-query memo of the k=16 int-form training artifacts per
     * (session, dir) — the mergeCache discipline, now holding BOTH
@@ -1406,11 +1400,12 @@ object TextOps {
     new graft.SessionCache[(Vector[(Int, Int, Long, String, String, String, Long)],
       DataFrame)]("bpe_merges16")
 
-  private def cachedInt16(s: SparkSession, dir: String)
+  private[graft] def cachedInt16(s: SparkSession, dir: String)
       : (Vector[(Int, Int, Long, String, String, String, Long)], DataFrame) =
     mergeCache16.getOrElseUpdate(s, dir, {
       // the vocabulary is the loop's last round, already an eager cut
-      bpeTrainIntWithVocab(Tables.documents(s, dir), k = 16)
+      val (merges, vocab, _) = bpeTrainInt(Tables.documents(s, dir), k = 16)
+      (merges, vocab)
     })
 
   /** The cached k=16 encoded vocabulary (w, syms, wc) — the
@@ -1945,128 +1940,67 @@ object TextOps {
        |ORDER BY ep.epoch, s.shard, pos""".stripMargin
   }
 
-  /** The int-form loop on an arbitrary (doc_id, text) frame, formatted
-    * to q251's output schema (real-string symbols). */
-  def bpeTrainIntFrom(docs: DataFrame, k: Int): DataFrame = {
-    val s = docs.sparkSession
+  /** An int-form merge table in q251's output schema (real-string
+    * symbols) — q259, q264 and the tests format through this. */
+  private[graft] def bpeMergeRows(s: SparkSession,
+      merges: Vector[(Int, Int, Long, String, String, String, Long)]): DataFrame = {
     import s.implicits._
-    bpeTrainMergesInt(docs, k).zipWithIndex.map {
-      case ((_, _, cnt, ls, rs, m, syms), j) => (j + 1, ls, rs, m, cnt, syms)
+    merges.zipWithIndex.map { case ((_, _, cnt, ls, rs, m, syms), j) =>
+      (j + 1, ls, rs, m, cnt, syms)
     }.toDF("round", "left_sym", "right_sym", "merged", "pair_count", "corpus_syms")
       .orderBy($"round")
   }
 
-  /** The k-round integer-symbol training loop — driver-resident merge
-    * table rows are (l, r, cnt, lstr, rstr, merged_str, corpus_syms);
-    * merge t's id is BpeSymBase + t. No placeholder corpus filter: the
-    * int form has no reserved characters (that is the point), so the
-    * char-form equivalence holds on placeholder-free corpora — the
-    * char form's own domain. */
-  private[graft] def bpeTrainMergesInt(docs: DataFrame, k: Int)
-      : Vector[(Int, Int, Long, String, String, String, Long)] = {
-    val (m, vocab) = bpeTrainIntWithVocab(docs, k)
-    graft.Ckpt.free(vocab)
-    m
-  }
+  /** q264: BPE training at a REALISTIC vocabulary scale (VERDICT r17
+    * item 5) — 64 merges of the one int-form trainer, [[bpeTrainInt]],
+    * which batches compatible merges per census round so k = 32000 is
+    * a plan, not 32000 driver round-trips. The oracle IS the
+    * sequential k=64 replay, so the hash grade proves the batched
+    * table ≡ sequential training on the live corpus every run. */
+  def q264BpeTrain64(s: SparkSession, dir: String): DataFrame =
+    bpeMergeRows(s, cachedBatched64(s, dir))
 
-  /** [[bpeTrainMergesInt]] ALSO returning the trained ENCODED
-    * VOCABULARY — the final word table (w, syms, wc): each distinct
-    * corpus word with its fully-merged symbol sequence. The vocabulary
-    * is the training's natural by-product (the loop rewrites it every
-    * round anyway; carrying the word string costs one passthrough
-    * column), and it is what makes the ENCODE pass a dictionary JOIN
-    * instead of a re-apply — q261. Returned as the loop's last eager
-    * localCheckpoint; the caller owns its blocks (free or pin). */
-  private[graft] def bpeTrainIntWithVocab(docs: DataFrame, k: Int)
-      : (Vector[(Int, Int, Long, String, String, String, Long)],
-         DataFrame) = {
-    val s = docs.sparkSession
-    import s.implicits._
-    require(k >= 1, s"k=$k")
-    var words = docs
-      .select(explode(tokens($"text")).as("w"))
-      .groupBy($"w").agg(count(lit(1)).as("wc"))
-      .select($"w", transform(sequence(lit(1), length($"w")),
-        i => ascii($"w".substr(i, lit(1)))).as("syms"), $"wc")
-      .persist()
-    var merges = Vector.empty[(Int, Int, Long, String, String, String, Long)]
-    var done = false
-    def strOf(sym: Int): String =
-      if (sym >= BpeSymBase) merges(sym - BpeSymBase - 1)._6
-      else new String(Character.toChars(sym))
-    def sqlStr(v: String): String = "'" + v.replace("'", "''") + "'"
-    try {
-      for (t <- 1 to k) {
-        val whens = merges.zipWithIndex.map { case ((_, _, _, _, _, m, _), j) =>
-          s"WHEN ${BpeSymBase + j + 1} THEN ${sqlStr(m)}"
-        }.mkString(" ")
-        def trSql(x: String): String =
-          if (merges.isEmpty) s"char($x)"
-          else s"CASE $x $whens ELSE char($x) END"
-        val pc = words
-          .select($"wc", explode(zip_with(
-            slice($"syms", lit(1), size($"syms") - 1),
-            slice($"syms", lit(2), size($"syms") - 1),
-            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-          .groupBy($"p.l", $"p.r").agg(sum($"wc").as("cnt"))
-        val dbgT0 = System.nanoTime()
-        val bestRows = pc
-          .selectExpr("l", "r", "cnt", s"${trSql("l")} AS ls", s"${trSql("r")} AS rs")
-          .orderBy($"cnt".desc, $"ls".asc, $"rs".asc).limit(1).collect()
-        val dbgT1 = System.nanoTime()
-        if (bestRows.isEmpty)
-          throw new IllegalStateException(
-            s"BPE int training exhausted the corpus at round $t of $k — no adjacent pair left")
-        val best = bestRows(0)
-        val (l, r, cnt) = (best.getInt(0), best.getInt(1), best.getLong(2))
-        val mid = BpeSymBase + t
-        val mstr = strOf(l) + strOf(r)
-        // the same degenerate-case guard as the char form (ADVICE r16):
-        // keeps strOf injective, hence the census tie order total
-        require(!merges.exists(_._6 == mstr),
-          s"BPE degenerate merge at round $t: '$mstr' was already minted by an earlier round")
-        // eager localCheckpoint, NOT persist: a persist caches blocks
-        // but keeps the logical lineage, and k nested fold lambdas make
-        // the analyzer's per-action cost grow ~1.7x per round (measured
-        // 3.1 s/round average at k=16, round 16 alone 23 s, on a
-        // CONSTANT-size word table — the 2^k plan bomb in analysis
-        // rather than execution). Truncating to a LogicalRDD each round
-        // makes every round's plan constant-size (twoStarComponents'
-        // rotation discipline); Ckpt.free drops the superseded round's
-        // blocks immediately.
-        val next = words
-          .select($"w", aggregate($"syms", lit(Array.empty[Int]),
-            (acc, x) => when(size(acc) > 0 &&
-                try_element_at(acc, lit(-1)) === lit(l) && x === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1), array(lit(mid))))
-              .otherwise(concat(acc, array(x)))).as("syms"), $"wc")
-          .transform(graft.Ckpt.cut)
-        val dbgT2 = System.nanoTime()
-        val syms = next.agg(sum($"wc" * size($"syms"))).collect()(0).getLong(0)
-        if (sys.env.contains("SPARK_GRAFT_BPE_DEBUG"))
-          System.err.println(f"BPEDBG round=$t argmax=${(dbgT1 - dbgT0) / 1e9}%.2f " +
-            f"build=${(dbgT2 - dbgT1) / 1e9}%.2f syms=${(System.nanoTime() - dbgT2) / 1e9}%.2f")
-        graft.Ckpt.free(words)
-        words.unpersist()
-        words = next
-        merges :+= ((l, r, cnt, strOf(l), strOf(r), mstr, syms))
-      }
-      done = true
-    } finally if (!done) { graft.Ckpt.free(words); words.unpersist() }
-    (merges, words)
-  }
+  private val mergeCacheB64 =
+    new graft.SessionCache[Vector[(Int, Int, Long, String, String, String, Long)]](
+      label = "bpe_merges_b64")
 
-  /** q264: BPE training at a REALISTIC vocabulary scale via BATCHED
-    * merges (VERDICT r17 item 5). The sequential loop pays one driver
-    * round-trip per merge — k = 32000 sequential rounds is not a
-    * 100 TB plan. The published remedy (batching compatible merges per
-    * census round, the SentencePiece/fast-BPE trick) lands here with a
-    * PROOF-CARRYING acceptance rule, so the batched table is
-    * bit-identical to sequential training — the oracle IS the
-    * sequential k=64 replay, so the hash grade proves the equivalence
-    * on the live corpus every run:
+  private def cachedBatched64(s: SparkSession, dir: String)
+      : Vector[(Int, Int, Long, String, String, String, Long)] =
+    mergeCacheB64.getOrElseUpdate(s, dir, {
+      val (merges, vocab, _) = bpeTrainInt(Tables.documents(s, dir), k = 64)
+      graft.Ckpt.free(vocab)
+      merges
+    })
+
+  /** Most merges one census round may batch: bounds the stacked-fold
+    * plan depth (the 2^k analyzer lesson, PERF.md r17). */
+  private val BpeBatchMax = 6
+
+  /** Census rows collected per round to pick the batch from. */
+  private val BpeCensusTop = 256
+
+  /** The integer-symbol BPE trainer — the one loop behind every
+    * int-form entry. Returns (merges, vocabulary, censusRounds):
+    *  - merges: the driver-resident merge table, rows (l, r, cnt,
+    *    lstr, rstr, merged_str, corpus_syms); merge t mints the id
+    *    BpeSymBase + t;
+    *  - vocabulary: the ENCODED word table (w, syms, wc), each distinct
+    *    corpus word with its fully-merged symbol sequence — the loop
+    *    rewrites it every round anyway, and it makes the encode pass a
+    *    dictionary JOIN instead of a re-apply (q261). It is the loop's
+    *    last eager cut; the caller owns its blocks (memoize or free);
+    *  - censusRounds: the census rounds the k merges took (~k/m).
+    * No placeholder corpus filter: the int form has no reserved
+    * characters, so its equivalence with the char form
+    * ([[bpeTrainMerges]], the constructed-corpus reference in LlmSpec)
+    * holds on placeholder-free corpora — the char form's own domain.
     *
-    *  - walk the census in sequential order (cnt DESC, ls, rs);
+    * The merge table is bit-identical to sequential training (one
+    * argmax merge per round) by a PROOF-CARRYING batch rule:
+    *
+    *  - walk the census in sequential order (cnt DESC, ls, rs) — the
+    *    minted-string uniqueness assert keeps the int→string
+    *    translation injective, so the order stays TOTAL;
     *  - accept a row into the batch iff it shares NO symbol with any
     *    already-accepted pair (disjoint pairs cannot overlap an
     *    occurrence, so earlier batch merges change neither its count
@@ -2077,39 +2011,7 @@ object TextOps {
     *    count is bounded by a symbol-sharing row's count), and strict
     *    dominance keeps the sequential argmax pointed at the batch;
     *  - stop at the first unsafe candidate (counts only fall down the
-    *    order, so nothing later can be safe) or at `mMax`.
-    *
-    * Every census round then applies its whole batch as stacked fold
-    * projections under ONE eager checkpoint and reads the per-stage
-    * symbol totals in ONE aggregation — 3 flat-plan driver actions per
-    * census round. Since r19 a DELTA-maintained census is available
-    * for wide-vocabulary corpora (see [[bpeTrainIntBatched]] — the
-    * default here stays full-census because this corpus's 31-word
-    * table makes the full explode cheaper than delta's per-round
-    * join, measured in BpeCensusStudy). `mMax` bounds the
-    * stacked-fold plan depth (the 2^k analyzer lesson, PERF.md r17). */
-  def q264BpeTrain64(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    cachedBatched64(s, dir)
-      .zipWithIndex.map { case ((_, _, cnt, ls, rs, m, syms), j) =>
-        (j + 1, ls, rs, m, cnt, syms)
-      }.toDF("round", "left_sym", "right_sym", "merged", "pair_count", "corpus_syms")
-      .orderBy($"round")
-  }
-
-  private val mergeCacheB64 =
-    new graft.SessionCache[Vector[(Int, Int, Long, String, String, String, Long)]](
-      label = "bpe_merges_b64")
-
-  private def cachedBatched64(s: SparkSession, dir: String)
-      : Vector[(Int, Int, Long, String, String, String, Long)] =
-    mergeCacheB64.getOrElseUpdate(s, dir,
-      bpeTrainIntBatched(Tables.documents(s, dir), k = 64)._1)
-
-  /** The batched int-symbol training loop — same merge table as
-    * [[bpeTrainMergesInt]] (pinned ≡ sequential in LlmSpec and proven
-    * per-run by the q264 oracle's sequential replay), in ~k/m census
-    * rounds. Returns (merges, censusRounds).
+    *    order, so nothing later can be safe) or at [[BpeBatchMax]].
     *
     * Disjointness buys two invariants the proof leans on: (1) merges
     * in one batch cannot overlap an occurrence, so the whole batch
@@ -2118,57 +2020,20 @@ object TextOps {
     * other — the plan is ONE flat fold per census round, not m nested
     * ones); (2) each rule's replacement count is exactly its minted
     * id's occurrence count in the batch output, so every SEQUENTIAL
-    * intermediate corpus total reconstructs from one aggregation.
-    *
-    * CENSUS-DELTA maintenance (`deltaCensus` — VERDICT r18 item 5): a
-    * full re-census explodes EVERY adjacent pair of EVERY distinct
-    * word each round, but a round's merges only change the pair counts
-    * of words they actually rewrote. The census lives as a
-    * materialized (l, r, cnt) table; each round updates it from the
-    * CHANGED words only — (new pairs − old pairs)·wc, a full-outer
-    * merge on the 8-byte pair key — so per-round census cost is
-    * proportional to the batch's replacement FOOTPRINT plus the
-    * distinct-pair table, not the vocabulary. Exactness is inductive
-    * (round 1 is the full census; every delta is the exact multiset
-    * difference), pinned ≡ full-census and ≡ sequential in LlmSpec
-    * and asserted per run by BpeCensusStudy. Delta mode pays 4
-    * flat-plan driver actions per census round (top-T collect, fold
-    * checkpoint, totals aggregation, census checkpoint) vs full
-    * mode's 3.
-    *
-    * The default is MEASURED, not assumed — and the measurement is a
-    * NEGATIVE result worth keeping on the record (BpeCensusStudy,
-    * k=64): full census beats delta on the graded corpus (18.6 s vs
-    * 31.2 s at sf0.1, 17.9 vs 20.6 at 10× — its word table is a
-    * constant 31 rows, the anti-case) AND on a 200k-distinct-word
-    * wide-vocabulary corpus (29.4 s vs 53.2 s, 27 census rounds) where
-    * each merge rewrites ~1% of the vocabulary and delta "should" win.
-    * Why it doesn't, in this architecture: the census groupBy
-    * map-side-combines, so the full re-census's shuffle already
-    * carries only distinct pairs — the explode itself is ONE linear
-    * scan of the word table, comparable to the fold pass every round
-    * must pay anyway — while delta adds an eager checkpoint (holding
-    * BOTH symbol arrays), a changed-word scan, and a full-outer join,
-    * a fixed ~0.5–0.9 s/round that no tested vocabulary amortizes.
-    * The crossover needs the census scan alone to exceed that fixed
-    * cost — vocabularies of ~10^7+ distinct words on this box — so
-    * the knob stays available (pinned bit-identical here and in
-    * BpeCensusStudy's per-run assert) but OFF by default. */
-  private[graft] def bpeTrainIntBatched(docs: DataFrame, k: Int,
-      mMax: Int = 6, topT: Int = 256, deltaCensus: Boolean = false)
-      : (Vector[(Int, Int, Long, String, String, String, Long)], Int) = {
+    * intermediate corpus total reconstructs from one aggregation. A
+    * census round is 3 flat-plan driver actions: the top-T collect,
+    * the fold's eager cut and the totals aggregation. */
+  private[graft] def bpeTrainInt(docs: DataFrame, k: Int)
+      : (Vector[(Int, Int, Long, String, String, String, Long)], DataFrame, Int) = {
     val s = docs.sparkSession
     import s.implicits._
     require(k >= 1, s"k=$k")
-    require(mMax >= 1 && topT > mMax, s"mMax=$mMax topT=$topT")
     var words = docs
       .select(explode(tokens($"text")).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("wc"))
       .select($"w", transform(sequence(lit(1), length($"w")),
         i => ascii($"w".substr(i, lit(1)))).as("syms"), $"wc")
       .persist()
-    var back: DataFrame = words // the checkpointed frame backing `words`
-    var census: DataFrame = null // delta mode: materialized (l, r, cnt)
     var merges = Vector.empty[(Int, Int, Long, String, String, String, Long)]
     var rounds = 0
     def strOf(sym: Int): String =
@@ -2185,32 +2050,26 @@ object TextOps {
         def trSql(x: String): String =
           if (merges.isEmpty) s"char($x)"
           else s"CASE $x $whens ELSE char($x) END"
-        lazy val pc = words
+        val top = words
           .select($"wc", explode(zip_with(
             slice($"syms", lit(1), size($"syms") - 1),
             slice($"syms", lit(2), size($"syms") - 1),
             (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
           .groupBy($"p.l", $"p.r").agg(sum($"wc").as("cnt"))
-        val censusNow =
-          if (deltaCensus) {
-            if (census == null) census = pc.transform(graft.Ckpt.cut)
-            census
-          } else pc
-        val top = censusNow
           .selectExpr("l", "r", "cnt", s"${trSql("l")} AS ls", s"${trSql("r")} AS rs")
-          .orderBy($"cnt".desc, $"ls".asc, $"rs".asc).limit(topT).collect()
+          .orderBy($"cnt".desc, $"ls".asc, $"rs".asc).limit(BpeCensusTop).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
             r.getString(3), r.getString(4)))
         if (top.isEmpty)
           throw new IllegalStateException(
-            s"BPE batched training exhausted the corpus at merge " +
+            s"BPE training exhausted the corpus at merge " +
               s"${merges.length + 1} of $k — no adjacent pair left")
         // rows beyond the collected top-T (if any) can share symbols
         // with whatever we accept — bound them by the last collected
         // count (counts only fall down the order)
-        val tailFloor = if (top.length == topT) top.last._3 else 0L
+        val tailFloor = if (top.length == BpeCensusTop) top.last._3 else 0L
         // tentative batch: maximal greedy disjoint set in census order
-        val batchCap = mMax.min(k - merges.length)
+        val batchCap = BpeBatchMax.min(k - merges.length)
         val used = scala.collection.mutable.Set.empty[Int]
         var tentative = Vector.empty[(Int, Int, Long, String, String)]
         for (row @ (l, r, _, _, _) <- top
@@ -2265,49 +2124,24 @@ object TextOps {
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(mid))))
               .otherwise(els)
           })
-        // the fold checkpoint carries BOTH the pre- and post-merge
-        // symbol arrays: the next word table reads syms2, and delta
-        // mode reads (syms, syms2) of the CHANGED words to update the
-        // census without re-exploding the whole corpus
-        val sel = words.select($"w", $"syms", folded.as("syms2"), $"wc")
+        // eager cut, NOT persist: a persist keeps the logical lineage,
+        // and nested fold lambdas make the analyzer's per-action cost
+        // grow ~1.7x per round (the 2^k plan bomb in analysis, PERF.md
+        // r17); the cut keeps every round's plan constant-size
+        val next = words.select($"w", folded.as("syms"), $"wc")
           .transform(graft.Ckpt.cut)
         // one aggregation recovers every sequential intermediate:
         // rule j's replacement count is its minted id's occurrence
         // count (later batch rules never consume a minted id)
-        val aggs = sum($"wc" * size($"syms2")).as("total") +:
+        val aggs = sum($"wc" * size($"syms")).as("total") +:
           rules.map { case (_, _, mid) =>
-            sum($"wc" * size(filter($"syms2", x => x === lit(mid)))) }
-        val row0 = sel.agg(aggs.head, aggs.tail: _*).collect()(0)
+            sum($"wc" * size(filter($"syms", x => x === lit(mid)))) }
+        val row0 = next.agg(aggs.head, aggs.tail: _*).collect()(0)
         val totalAfterAll = row0.getLong(0)
         val repl = rules.indices.map(i => row0.getLong(i + 1))
-        if (deltaCensus) {
-          // merges only shrink arrays, so "changed" == "size shrank";
-          // each changed word retracts its old pairs and asserts its
-          // new ones at its own weight — the exact multiset difference
-          val changed = sel.filter(size($"syms2") < size($"syms"))
-          def signedPairs(cn: org.apache.spark.sql.Column,
-                          sign: org.apache.spark.sql.Column) =
-            transform(zip_with(
-              slice(cn, lit(1), size(cn) - 1), slice(cn, lit(2), size(cn) - 1),
-              (a, b) => struct(a.as("l"), b.as("r"))),
-              p => struct(p.getField("l").as("l"), p.getField("r").as("r"),
-                sign.as("d")))
-          val delta = changed.select(explode(concat(
-              signedPairs($"syms", -$"wc"), signedPairs($"syms2", $"wc"))).as("p"))
-            .groupBy($"p.l", $"p.r").agg(sum($"p.d").as("d"))
-            .filter($"d" =!= 0)
-          val upd = census.join(delta, Seq("l", "r"), "full_outer")
-            .select($"l", $"r",
-              (coalesce($"cnt", lit(0L)) + coalesce($"d", lit(0L))).as("cnt"))
-            .filter($"cnt" > 0)
-            .transform(graft.Ckpt.cut)
-          graft.Ckpt.free(census)
-          census = upd
-        }
-        graft.Ckpt.free(back)
-        back.unpersist()
-        back = sel
-        words = sel.select($"w", $"syms2".as("syms"), $"wc")
+        graft.Ckpt.free(words)
+        words.unpersist()
+        words = next
         batch.zipWithIndex.foreach { case ((l, r, cnt, _, _), i) =>
           val mstr = strOf(l) + strOf(r)
           require(!merges.exists(_._6 == mstr),
@@ -2320,11 +2154,8 @@ object TextOps {
         }
       }
       done = true
-    } finally {
-      graft.Ckpt.free(back); back.unpersist()
-      if (census != null) graft.Ckpt.free(census)
-    }
-    (merges, rounds)
+    } finally if (!done) { graft.Ckpt.free(words); words.unpersist() }
+    (merges, words, rounds)
   }
 
   /** The k-round int-form training WITH-prefix: w0 = code-point word

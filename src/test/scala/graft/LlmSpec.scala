@@ -1012,23 +1012,31 @@ class LlmSpec extends AnyFunSuite {
       store.limit(0), centSup.limit(0), supers.limit(0)).count() == 0)
   }
 
+  /** A merge table in q251's schema, as comparable rows. */
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getAs[Int]("round"), r.getAs[String]("left_sym"),
+      r.getAs[String]("right_sym"), r.getAs[String]("merged"),
+      r.getAs[Long]("pair_count"), r.getAs[Long]("corpus_syms"))).toSeq
+
+  /** The int-form trainer's merge table in q251's schema; the
+    * vocabulary it also returns is freed. */
+  private def intTable(docs: org.apache.spark.sql.DataFrame, k: Int) = {
+    val (merges, vocab, _) = llm.TextOps.bpeTrainInt(docs, k)
+    graft.Ckpt.free(vocab)
+    llm.TextOps.bpeMergeRows(spark, merges)
+  }
+
   test("q259 int-symbol BPE ≡ char-form BPE on rounds 1-8; int form runs past the char cap") {
     import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Int]("round"), r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[String]("merged"),
-        r.getAs[Long]("pair_count"), r.getAs[Long]("corpus_syms"))).toSeq
     // the q251 chaining corpus: the int form must reproduce the char
     // form's merges exactly — minting ids instead of placeholder chars
     // changes the representation, never the answer
     val text = (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    assert(rows(llm.TextOps.bpeTrainIntFrom(docs, 3)) ==
-      rows(llm.TextOps.bpeTrainFrom(docs, 3)))
+    assert(rows(intTable(docs, 3)) == rows(llm.TextOps.bpeTrainFrom(docs, 3)))
     // ...and on the live corpus over the char form's whole k range
-    assert(rows(llm.TextOps.bpeTrainIntFrom(
-        graft.Tables.documents(spark, SparkTestSession.sf), 8)) ==
+    assert(rows(intTable(graft.Tables.documents(spark, SparkTestSession.sf), 8)) ==
       rows(llm.TextOps.q251BpeTrain(spark, SparkTestSession.sf)))
     // past the cap: rounds 9..16 exist, stay monotone, and keep
     // compressing — the representation was the only limit
@@ -1079,14 +1087,22 @@ class LlmSpec extends AnyFunSuite {
     // (vocab-join + fallback ≡ full re-apply, word for word).
     val train = Seq((1L, (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" "))).toDF("doc_id", "text")
-    val (merges, vocab) = llm.TextOps.bpeTrainIntWithVocab(train, 4)
+    def reapplies(merges: Seq[(Int, Int, Long, String, String, String, Long)],
+                  vocab: org.apache.spark.sql.DataFrame): Unit = {
+      val mpairs = merges.map(m => (m._1, m._2))
+      val words = vocab.select($"w", $"syms").as[(String, Seq[Int])].collect()
+      assert(words.nonEmpty)
+      words.foreach { case (w, syms) =>
+        assert(llm.BpeApply.applyMergesInt(w, mpairs).toSeq == syms,
+          s"vocab row for '$w' must equal the ${merges.length}-merge re-apply") }
+    }
+    val (merges, vocab, _) = llm.TextOps.bpeTrainInt(train, 4)
     val mpairs = merges.map(m => (m._1, m._2))
-    val rows = vocab.select($"w", $"syms").as[(String, Seq[Int])].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (w, syms) =>
-      assert(llm.BpeApply.applyMergesInt(w, mpairs).toSeq == syms,
-        s"vocab row for '$w' must equal the 4-merge re-apply") }
+    reapplies(merges, vocab)
     graft.Ckpt.free(vocab)
+    // ...and the live k=16 vocabulary the encode entries join
+    val (merges16, vocab16) = llm.TextOps.cachedInt16(spark, SparkTestSession.sf)
+    reapplies(merges16, vocab16)
     // an UNSEEN word built from trained pieces compresses through the
     // fallback (the q261 inner join would have dropped it entirely)
     val abcdId = llm.TextOps.BpeSymBase + merges.indexWhere(_._6 == "abcd") + 1
@@ -1116,56 +1132,37 @@ class LlmSpec extends AnyFunSuite {
     // argmax here or the table diverges from sequential
     val inter = Seq((1L, (Seq.fill(5)("aab") ++ Seq.fill(5)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(llm.TextOps.bpeTrainIntBatched(inter, 3)._1 ==
-      llm.TextOps.bpeTrainMergesInt(inter, 3),
+    assert(rows(intTable(inter, 3)) == rows(llm.TextOps.bpeTrainFrom(inter, 3)),
       "interaction corpus: batched must fall back to the sequential order")
-    // census-delta maintenance (VERDICT r18 item 5) ≡ full re-census on
-    // the interaction corpus — the corpus where the census CHANGES the
-    // most per merge relative to its size
-    assert(llm.TextOps.bpeTrainIntBatched(inter, 3, deltaCensus = true)._1 ==
-      llm.TextOps.bpeTrainIntBatched(inter, 3, deltaCensus = false)._1,
-      "delta census must reproduce the full re-census merge table")
     // self-pair corpus (ADVICE r18): (a,a) at 20 is the argmax, (c,d)
     // at 9 is symbol-disjoint — but merging (a,a)→X mints (X,a) at 10,
     // which sequential step 2 prefers over (c,d). The blocker set
     // excludes accepted rows, so only the self-pair floor catches this.
     val selfp = Seq((1L, (Seq.fill(10)("aaa") ++ Seq.fill(9)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(llm.TextOps.bpeTrainIntBatched(selfp, 3)._1 ==
-      llm.TextOps.bpeTrainMergesInt(selfp, 3),
+    assert(rows(intTable(selfp, 3)) == rows(llm.TextOps.bpeTrainFrom(selfp, 3)),
       "self-pair corpus: batched must not batch past a self-pair whose " +
         "minted pair outranks the next disjoint candidate")
     // self-pair where batching IS safe: the next candidate strictly
     // dominates the self-pair's own count, so no minted pair can rival
     val selfOk = Seq((1L, (Seq.fill(4)("aaa") ++ Seq.fill(20)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(llm.TextOps.bpeTrainIntBatched(selfOk, 2)._1 ==
-      llm.TextOps.bpeTrainMergesInt(selfOk, 2))
+    assert(rows(intTable(selfOk, 2)) == rows(llm.TextOps.bpeTrainFrom(selfOk, 2)))
     // chaining corpus (the q251 construction)
     val chain = Seq((1L, (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" "))).toDF("doc_id", "text")
-    assert(llm.TextOps.bpeTrainIntBatched(chain, 4)._1 ==
-      llm.TextOps.bpeTrainMergesInt(chain, 4))
-    // live corpus at k=16: merge-identical to the memoized sequential
-    // training, in strictly fewer census rounds (the driver-round-trip
-    // cut that makes k=32000 a plan)
-    // live corpus: delta-census (the default engine path) ≡ full
-    // re-census, merge-for-merge
-    assert(llm.TextOps.bpeTrainIntBatched(
-        graft.Tables.documents(spark, SparkTestSession.sf), 16,
-        deltaCensus = true)._1 ==
-      llm.TextOps.bpeTrainIntBatched(
-        graft.Tables.documents(spark, SparkTestSession.sf), 16,
-        deltaCensus = false)._1,
-      "live corpus: delta census must reproduce the full re-census table")
-    val (bl, rounds) = llm.TextOps.bpeTrainIntBatched(
+    assert(rows(intTable(chain, 4)) == rows(llm.TextOps.bpeTrainFrom(chain, 4)))
+    // live corpus: the k=64 memo's first 16 merges are q259's k=16
+    // table — the two runs batch differently near merge 16 (k=16 caps
+    // its last batch), so the prefix is a real check
+    assert(rows(llm.TextOps.q264BpeTrain64(spark, SparkTestSession.sf)).take(16) ==
+      rows(llm.TextOps.q259BpeTrain16(spark, SparkTestSession.sf)),
+      "live corpus: the k=64 table's first 16 rows must be q259's table")
+    // ...in strictly fewer census rounds than merges (the
+    // driver-round-trip cut that makes k=32000 a plan)
+    val (_, liveVocab, rounds) = llm.TextOps.bpeTrainInt(
       graft.Tables.documents(spark, SparkTestSession.sf), 16)
-    val seqRows = llm.TextOps.q259BpeTrain16(spark, SparkTestSession.sf)
-      .collect().map(r => (r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[String]("merged"),
-        r.getAs[Long]("pair_count"), r.getAs[Long]("corpus_syms"))).toSeq
-    assert(bl.map(m => (m._4, m._5, m._6, m._3, m._7)) == seqRows,
-      "live corpus: batched k=16 must reproduce the sequential table")
+    graft.Ckpt.free(liveVocab)
     assert(rounds < 16, s"batching must cut census rounds, got $rounds/16")
     // tie-poor census (the realistic Zipfian top): four symbol-disjoint
     // pairs at strictly distinct counts — no blocker rivals anything,
@@ -1175,9 +1172,27 @@ class LlmSpec extends AnyFunSuite {
     val zipf = Seq((1L, (Seq.fill(40)("ab") ++ Seq.fill(30)("cd") ++
       Seq.fill(20)("ef") ++ Seq.fill(10)("gh")).mkString(" ")))
       .toDF("doc_id", "text")
-    val (bz, rz) = llm.TextOps.bpeTrainIntBatched(zipf, 4)
-    assert(bz == llm.TextOps.bpeTrainMergesInt(zipf, 4))
+    val (bz, zipfVocab, rz) = llm.TextOps.bpeTrainInt(zipf, 4)
+    graft.Ckpt.free(zipfVocab)
+    assert(rows(llm.TextOps.bpeMergeRows(spark, bz)) ==
+      rows(llm.TextOps.bpeTrainFrom(zipf, 4)))
     assert(rz == 1, s"disjoint distinct-count census must batch fully: $rz")
+  }
+
+  test("an exhausted BPE corpus throws and leaves no persistent RDD behind") {
+    import spark.implicits._
+    // "ab cd" holds two pairs: round 1 batches both merges, round 2
+    // finds no pair left. The trainer hands its last cut to the caller
+    // only on success, so on this failure it must free it itself.
+    val docs = Seq((1L, "ab cd")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException](llm.TextOps.bpeTrainInt(docs, 3))
+    assert(e.getMessage.contains("exhausted"), e.getMessage)
+    // the context cleaner may free older RDDs meanwhile, so check that
+    // nothing was added rather than that the set is unchanged
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"a failed training run left persistent RDDs: $left")
   }
 
   test("q266 id stream: per-doc ids sum to the training's corpus symbol total") {

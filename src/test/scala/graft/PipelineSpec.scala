@@ -41,7 +41,7 @@ class PipelineSpec extends AnyFunSuite {
     val docs = Seq((0L, a, "src1"), (1L, a, "src1"), (2L, c, "src1"),
       (3L, d, "src1"), (4L, f, "src0"), (5L, e, "src1"))
       .toDF("doc_id", "text", "source")
-    val (_, vocab) = llm.TextOps.bpeTrainIntWithVocab(docs, 16)
+    val (_, vocab, _) = llm.TextOps.bpeTrainInt(docs, 16)
     try {
       val out = llm.Pipeline.pipelineFunnelFrom(docs, vocab).collect()
       val by = out.map(r => r.getAs[Int]("stage_id") ->

@@ -561,8 +561,10 @@ def dangling_members(text, main_root):
     """Backticked `Object.member` citations in `text` whose Object is an
     `object` defined under main_root but whose member no file defining
     that object declares (def/val/var/type/class/trait/object), sorted.
-    File names (`SURVEY.md`, `Streams.scala`) and names that are no
-    engine object (`Dataset.unpivot`) are skipped."""
+    A bare name cited right after one (`Obj.member` / `helper`) is a
+    member of the same object and is checked the same way. File names
+    (`SURVEY.md`, `Streams.scala`) and names that are no engine object
+    (`Dataset.unpivot`) are skipped."""
     sources = {}
     for d, _, files in os.walk(main_root):
         for f in files:
@@ -571,15 +573,18 @@ def dangling_members(text, main_root):
                     src = fh.read()
                 for obj in re.findall(r"\bobject\s+(\w+)", src):
                     sources.setdefault(obj, []).append(src)
+    cited = [(obj, member)
+             for span in re.findall(r"`([^`\n]+)`", text)
+             for obj, member in re.findall(r"\b([A-Z]\w*)\.(\w+)", span)]
+    cited += re.findall(r"`[^`\n]*\b([A-Z]\w*)\.\w+`\s*/\s*`(\w+)`", text)
     bad = set()
-    for span in re.findall(r"`([^`\n]+)`", text):
-        for obj, member in re.findall(r"\b([A-Z]\w*)\.(\w+)", span):
-            if obj not in sources or member in FILE_EXTS:
-                continue
-            decl = re.compile(r"\b(?:def|val|var|type|class|trait|object)\s+"
-                              + re.escape(member) + r"\b")
-            if not any(decl.search(src) for src in sources[obj]):
-                bad.add(f"{obj}.{member}")
+    for obj, member in cited:
+        if obj not in sources or member in FILE_EXTS:
+            continue
+        decl = re.compile(r"\b(?:def|val|var|type|class|trait|object)\s+"
+                          + re.escape(member) + r"\b")
+        if not any(decl.search(src) for src in sources[obj]):
+            bad.add(f"{obj}.{member}")
     return sorted(bad)
 
 def cmd_check_coverage(args):

@@ -410,6 +410,13 @@ def main():
     gone = ok_text + "| S19 | `queue.QueueOps.etaSeconds` |\n"
     assert dangling_members(gone, mroot) == ["QueueOps.etaSeconds"], \
         dangling_members(gone, mroot)
+    # a bare name paired after an `Obj.member` citation resolves
+    # against the same object
+    pair = "| S21 | `queue.QueueOps.pulse` / `legalMoves` |\n"
+    assert dangling_members(pair, mroot) == [], dangling_members(pair, mroot)
+    pair_gone = "| S21 | `queue.QueueOps.pulse` / `pulseFrom` |\n"
+    assert dangling_members(pair_gone, mroot) == ["QueueOps.pulseFrom"], \
+        dangling_members(pair_gone, mroot)
     shutil.rmtree(mroot)
     # the committed COVERAGE.md cites only members the engine declares
     assert dangling_members(cov, os.path.join(root_, "src", "main")) == [], \
