@@ -1069,159 +1069,51 @@ object TextOps {
       |ORDER BY iter, rk""".stripMargin
 
   /** q251: k-ROUND BPE TRAINING (VERDICT r15 item 4) — q182 unrolled
-    * two merges and stopped; a real tokenizer trains thousands. This
-    * is the k-round loop (k=8 registered) with the merge table as
-    * DRIVER-RESIDENT MODEL STATE (the q237/q244 discipline: one
-    * ≤k-entry table on the driver, one 1-row argmax collect per round,
-    * persist rotation on the word table — never a 2^k lazily-chained
-    * plan). Representation: after round j the merged symbol is the
-    * single placeholder char chr(j), so EVERY symbol is always one
-    * character and round t's apply step stays
-    * `replace(w, raw(l)·raw(r), chr(t))` — q193's placeholder-space
-    * trick made inductive. Pair counting translates placeholders back
-    * to their real symbol strings (injective, so grouping is
-    * unchanged) because the tie order (count DESC, left ASC, right
-    * ASC) is defined on REAL symbols in the query text — the order
-    * both engines replay.
+    * two merges and stopped; a real tokenizer trains thousands. q251
+    * grades the first 8 merges of the session's k=16 int-form training
+    * ([[cachedInt16]], the run q259 grades whole): merges are taken in
+    * order, so an 8-merge table is the 16-merge table's prefix, and
+    * the catalog trains BPE through one loop, [[bpeTrainInt]].
     *
     * Output: the trained merge table — per round the chosen pair (as
     * real symbols), the merged symbol, its weighted pair count, and
     * the corpus symbol total AFTER applying the merge (the encode
     * pass's compression accounting: Σ wc·len(w) falls by exactly the
     * number of non-overlapping occurrences replaced, ≥1 and ≤
-    * pair_count — pinned in LlmSpec). Oracle: all k rounds unrolled
-    * CTE-by-CTE (q182's generator pattern) with the per-round word
-    * tables MATERIALIZED — the multi-referenced k-step CTE chain is
-    * the SQL twin of the 2^T lazy-plan bomb (q244's DuckDB lesson).
+    * pair_count — pinned in LlmSpec). The tie order is (count DESC,
+    * left ASC, right ASC) on REAL symbol strings, the order both
+    * engines replay.
     *
-    * 100 TB shape: each round is one explode + one hash aggregation
-    * over the DISTINCT word table (|vocab| rows, not |tokens| — the
-    * BPE trick), a 1-row collect, and one map-side replace; the corpus
-    * is touched once (the initial word count). */
-  def q251BpeTrain(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    cachedMerges(s, dir).zipWithIndex.map { case ((l, r, cnt, m, syms), j) =>
-      (j + 1, l, r, m, cnt, syms)
-    }.toDF("round", "left_sym", "right_sym", "merged", "pair_count", "corpus_syms")
-      .orderBy($"round")
-  }
-
-  /** Cross-query memo of the k=8 merge table per (session, dir): q251
-    * grades the table, q256 applies it — a tokenizer trains ONCE and
-    * every consumer reads the artifact (the pairCache discipline for
-    * driver-resident model state; the value is a 5-tuple Vector, and
-    * the ledger records the training seconds under "bpe_merges"). */
-  private val mergeCache =
-    new graft.SessionCache[Vector[(String, String, Long, String, Long)]](
-      label = "bpe_merges")
-
-  private def cachedMerges(s: SparkSession,
-      dir: String): Vector[(String, String, Long, String, Long)] =
-    mergeCache.getOrElseUpdate(s, dir,
-      bpeTrainMerges(Tables.documents(s, dir), k = 8))
-
-  /** q251's engine on an arbitrary (doc_id, text) frame — split out so
-    * LlmSpec can pin merge chaining (a merged symbol participating in
-    * a later merge) on a constructed corpus at small k. Throws if the
-    * corpus exhausts (no pair left) before k rounds. */
-  def bpeTrainFrom(docs: DataFrame, k: Int): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val merges = bpeTrainMerges(docs, k)
-    merges.zipWithIndex.map { case ((l, r, cnt, m, syms), j) =>
-      (j + 1, l, r, m, cnt, syms)
-    }.toDF("round", "left_sym", "right_sym", "merged", "pair_count", "corpus_syms")
-      .orderBy($"round")
-  }
+    * Oracle: the char form — after round j the merged symbol is the
+    * single placeholder char chr(j), so every symbol stays one
+    * character and round t's apply is
+    * `replace(w, raw(l)·raw(r), chr(t))` (q193's placeholder trick made
+    * inductive); all k rounds unrolled CTE-by-CTE with the per-round
+    * word tables MATERIALIZED (q244's DuckDB lesson). The oracle drops
+    * every document containing chr(1)..chr(8), so the two agree on
+    * corpora without such characters, the domain of this entry (the
+    * LlmSpec test corpus is checked to hold none). */
+  def q251BpeTrain(s: SparkSession, dir: String): DataFrame =
+    bpeMergeRows(s, cachedInt16(s, dir)._1.take(8))
 
   private def ph(j: Int): String = j.toChar.toString // chr(1)..chr(8)
 
-  /** The placeholder-space chars of a real symbol under a merge table
-    * prefix — identity for original chars, chr(j) for merge j's
-    * output. */
-  private def rawSym(merges: Seq[(String, String, Long, String, Long)],
-                     sym: String): String =
-    merges.indexWhere(_._4 == sym) match {
+  /** The placeholder-space chars of a real symbol under the merged
+    * strings of a merge table prefix — identity for original chars,
+    * chr(j) for merge j's output. */
+  private def rawSym(minted: Seq[String], sym: String): String =
+    minted.indexOf(sym) match {
       case -1 => sym
       case j  => ph(j + 1)
     }
-
-  /** The k-round training loop itself, returning the DRIVER-RESIDENT
-    * merge table (left, right, count, merged, corpus_syms) — shared by
-    * q251 (the graded merge table) and q256 (the corpus-wide encode
-    * pass applying it). */
-  private[graft] def bpeTrainMerges(docs: DataFrame,
-      k: Int): Vector[(String, String, Long, String, Long)] = {
-    val s = docs.sparkSession
-    import s.implicits._
-    require(k >= 1 && k <= 8, s"k=$k outside the placeholder range 1..8")
-    val noPh = (1 to 8).map(j => !$"text".contains(ph(j))).reduce(_ && _)
-    def chars(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      transform(sequence(lit(1), length(c)), i => c.substr(i, lit(1)))
-    var words = docs.filter(noPh)
-      .select(explode(tokens($"text")).as("w"))
-      .groupBy($"w").agg(count(lit(1)).as("wc"))
-      .persist()
-    // driver-resident merge table: (left, right, count, merged, syms)
-    var merges = Vector.empty[(String, String, Long, String, Long)]
-    // failure paths must not strand cached word tables (CODE-REVIEW
-    // r16): the loop rotates persists on success; the outer finally
-    // frees whatever `words` points at when a round throws (the
-    // exhausted-corpus IllegalStateException, or any Spark failure),
-    // and the syms step frees its own `next` on the narrow window
-    // between persist and rotation. unpersist is idempotent, so the
-    // success path's own frees are unaffected.
-    try {
-    for (t <- 1 to k) {
-      // translate a placeholder-space symbol column to real symbols
-      val tr = (c: org.apache.spark.sql.Column) => merges.zipWithIndex.foldLeft(c) {
-        case (acc, ((_, _, _, m, _), j)) => when(c === ph(j + 1), m).otherwise(acc)
-      }
-      val cs = chars($"w")
-      val pc = words
-        .select($"wc", explode(zip_with(
-          slice(cs, lit(1), size(cs) - 1), slice(cs, lit(2), size(cs) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .select($"wc", tr($"p.l").as("l"), tr($"p.r").as("r"))
-        .groupBy($"l", $"r").agg(sum($"wc").as("cnt"))
-      val bestRows = pc.orderBy($"cnt".desc, $"l".asc, $"r".asc).limit(1).collect()
-      if (bestRows.isEmpty)
-        throw new IllegalStateException(
-          s"BPE training exhausted the corpus at round $t of $k — no adjacent pair left")
-      val best = bestRows(0)
-      val (l, r, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
-      // ADVICE r16: if two rounds ever minted the SAME merged string
-      // (two different (l, r) pairs concatenating identically), later
-      // rawSym translations would resolve occurrences to the FIRST
-      // round's placeholder only and replace() would miss text encoded
-      // under the second — fail loudly at training, not via a
-      // downstream invariant at bench time. Uniqueness also keeps
-      // real↔placeholder translation injective, which is what makes
-      // the census tie order total.
-      require(!merges.exists(_._4 == l + r),
-        s"BPE degenerate merge at round $t: '${l + r}' was already minted by an earlier round")
-      val next = words
-        .select(org.apache.spark.sql.functions.replace(
-          $"w", lit(rawSym(merges, l) + rawSym(merges, r)), lit(ph(t))).as("w"), $"wc")
-        .persist()
-      val syms =
-        try next.agg(sum($"wc" * length($"w"))).collect()(0).getLong(0)
-        catch { case e: Throwable => next.unpersist(); throw e }
-      words.unpersist() // next is materialized by the syms collect
-      words = next
-      merges :+= ((l, r, cnt, l + r, syms))
-    }
-    } finally words.unpersist()
-    merges
-  }
 
   /** q251 oracle: k=8 rounds unrolled — per round the pair census over
     * the previous word table (placeholders translated through the
     * earlier rounds' scalar merge CTEs), the LIMIT 1 argmax at the
     * query-text tie order, the placeholder-space replace, and the
     * symbol total; word tables and per-round argmaxes MATERIALIZED. */
-  /** Placeholder→real translation of a symbol expression at round t
-    * (SQL side of `tr` in [[bpeTrainMerges]]). */
+  /** Placeholder→real translation of a symbol expression at round t:
+    * chr(j) becomes round j's merged string. */
   private def bpeTrSql(x: String, t: Int): String =
     if (t == 1) x
     else {
@@ -1291,31 +1183,34 @@ object TextOps {
   }
 
   /** q256: the ENCODE pass at the k=8 merge table — close the r16
-    * tokenizer loop the way q193 closed q182's: train the 8 merges
-    * in-engine ([[bpeTrainMerges]] — the SAME driver-resident loop
-    * q251 grades), then apply ALL EIGHT to every word of every source
-    * as one flat chain of literal replaces (the merge table is driver
-    * state, so the whole encode is a single codegen'd projection — no
-    * per-round action, no join), and report per-source compression
-    * with exact integer accounting: token count, chars before, symbols
-    * after, saved parts-per-million. The oracle re-derives the merge
-    * table CTE-by-CTE (shared [[bpeRoundCtes]] generator — one
-    * training definition, two graded consumers) and applies the same
-    * nested replace per source. Σ_source syms_after must equal q251's
-    * round-8 corpus_syms — pinned in LlmSpec (the two queries grade
-    * one training run's global and per-source views). */
+    * tokenizer loop the way q193 closed q182's: take q251's table (the
+    * first 8 merges of the session's k=16 training, [[cachedInt16]]),
+    * then apply ALL EIGHT to every word of every source as one flat
+    * chain of literal replaces in placeholder space (the merge table
+    * is driver state, so the whole encode is a single codegen'd
+    * projection — no per-round action, no join), and report per-source
+    * compression with exact integer accounting: token count, chars
+    * before, symbols after, saved parts-per-million. The oracle
+    * re-derives the merge table CTE-by-CTE (shared [[bpeRoundCtes]]
+    * generator) and applies the same nested replace per source. Both
+    * sides drop documents containing chr(1)..chr(8), the placeholders;
+    * training keeps them, so the entry's domain is corpora without
+    * such characters (as for q251). Σ_source syms_after must equal
+    * q251's round-8 corpus_syms — pinned in LlmSpec (the two queries
+    * grade one training run's global and per-source views). */
   def q256BpeEncode8(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val merges = cachedMerges(s, dir)
+    val merges = cachedInt16(s, dir)._1.take(8)
+    val minted = merges.map(_._6)
     val noPh = (1 to 8).map(j => !$"text".contains(ph(j))).reduce(_ && _)
     val srcWords = docs.filter(noPh)
       .select($"source", explode(tokens($"text")).as("w"))
       .groupBy($"source", $"w").agg(count(lit(1)).as("wc"))
     val applied = merges.zipWithIndex.foldLeft($"w": org.apache.spark.sql.Column) {
-      case (acc, ((l, r, _, _, _), j)) =>
+      case (acc, ((_, _, _, l, r, _, _), j)) =>
         org.apache.spark.sql.functions.replace(acc,
-          lit(rawSym(merges.take(j), l) + rawSym(merges.take(j), r)),
+          lit(rawSym(minted.take(j), l) + rawSym(minted.take(j), r)),
           lit(ph(j + 1)))
     }
     srcWords
@@ -1360,15 +1255,16 @@ object TextOps {
   val BpeSymBase: Int = 0x110000
 
   /** q259: k=16 BPE TRAINING, integer-symbol form (VERDICT r16 item
-    * 2) — q251's loop with the k ≤ 8 REPRESENTATION cap lifted: the
-    * placeholder trick spends one char per merge, so the char form
-    * cannot reach even a toy vocabulary's hundreds of merges; here a
-    * word is an `array<int>` symbol sequence (initial symbols = code
-    * points) and merge t MINTS the fresh integer id BpeSymBase+t —
-    * rounds are bounded by the vocabulary target, not the alphabet.
+    * 2) — the session's k=16 training ([[cachedInt16]]), whose first 8
+    * merges q251 grades. The char form's placeholder trick spends one
+    * char per merge, so it cannot reach even a toy vocabulary's
+    * hundreds of merges; here a word is an `array<int>` symbol sequence
+    * (initial symbols = code points) and merge t MINTS the fresh
+    * integer id BpeSymBase+t — rounds are bounded by the vocabulary
+    * target, not the alphabet.
     *
-    * Trained by [[bpeTrainInt]], the one int-form loop (q264 runs it
-    * to 64): per census round one explode + hash aggregation over the
+    * Trained by [[bpeTrainInt]], the one BPE training loop (q264 runs
+    * it to 64): per census round one explode + hash aggregation over the
     * DISTINCT word table, a top-T collect, one map-side apply of the
     * batch; merge table as driver-resident model state with eager-cut
     * rotation and exception-safe free. The apply step is a left-to-right fold
@@ -1376,14 +1272,14 @@ object TextOps {
     * accumulator collapses to the minted id — non-overlapping
     * left-to-right, EXACTLY `replace`'s semantics (the minted id is
     * fresh, so a replacement can never seed a new match in the same
-    * round), which is what makes the int form ≡ the char form on
-    * rounds 1..8 (pinned in LlmSpec on constructed AND live corpora).
+    * round), which is what makes the int form ≡ the char-form oracles
+    * of q251/q256 on rounds 1..8, and ≡ LlmSpec's sequential reference
+    * trainer on constructed AND live corpora.
     * The census argmax tie order is (cnt DESC, real-string ASC,
     * real-string ASC) — the minted-string uniqueness assert keeps the
     * int→string translation injective, so the order stays TOTAL and
     * both engines replay it; the in-engine translation uses `char()`
-    * for original code points (exact on this ASCII corpus — the same
-    * alphabet assumption the char form's placeholder filter makes).
+    * for original code points (exact on this ASCII corpus).
     *
     * Oracle: all 16 rounds unrolled CTE-by-CTE (MATERIALIZED word
     * tables, q244's DuckDB lesson) with the apply fold restated as
@@ -1393,9 +1289,11 @@ object TextOps {
     bpeMergeRows(s, cachedInt16(s, dir)._1)
 
   /** Cross-query memo of the k=16 int-form training artifacts per
-    * (session, dir) — the mergeCache discipline, now holding BOTH
-    * outputs of one training run: the 16-row merge table (q259 grades
-    * it) and the cut encoded vocabulary (q261 joins it). */
+    * (session, dir) — a tokenizer trains ONCE and every consumer reads
+    * the artifact. It holds BOTH outputs of one training run: the
+    * 16-row merge table (q259 grades it, q251/q256 its first 8 rows)
+    * and the cut encoded vocabulary (q261 joins it); the memo ledger
+    * records the training seconds under "bpe_merges16". */
   private val mergeCache16 =
     new graft.SessionCache[(Vector[(Int, Int, Long, String, String, String, Long)],
       DataFrame)]("bpe_merges16")
@@ -1415,8 +1313,8 @@ object TextOps {
   private[llm] def vocab16(s: SparkSession, dir: String): DataFrame =
     cachedInt16(s, dir)._2
 
-  /** q261: the k=16 ENCODE pass as a VOCABULARY JOIN — q256 closed the
-    * char-form loop by re-applying the 8 merges to every source word;
+  /** q261: the k=16 ENCODE pass as a VOCABULARY JOIN — q256 closes the
+    * k=8 table by re-applying the 8 merges to every source word;
     * at k=16 the training artifact already contains something better:
     * the final word table IS the encoded vocabulary (every distinct
     * corpus word with its fully-merged symbol sequence — the loop
@@ -1941,7 +1839,7 @@ object TextOps {
   }
 
   /** An int-form merge table in q251's output schema (real-string
-    * symbols) — q259, q264 and the tests format through this. */
+    * symbols) — q251, q259, q264 and the tests format through this. */
   private[graft] def bpeMergeRows(s: SparkSession,
       merges: Vector[(Int, Int, Long, String, String, String, Long)]): DataFrame = {
     import s.implicits._
@@ -1991,9 +1889,9 @@ object TextOps {
     *    last eager cut; the caller owns its blocks (memoize or free);
     *  - censusRounds: the census rounds the k merges took (~k/m).
     * No placeholder corpus filter: the int form has no reserved
-    * characters, so its equivalence with the char form
-    * ([[bpeTrainMerges]], the constructed-corpus reference in LlmSpec)
-    * holds on placeholder-free corpora — the char form's own domain.
+    * characters. LlmSpec tests it against a sequential reference
+    * trainer; the char-form oracles of q251/q256 drop documents holding
+    * chr(1)..chr(8), so those entries agree on corpora without them.
     *
     * The merge table is bit-identical to sequential training (one
     * argmax merge per round) by a PROOF-CARRYING batch rule:

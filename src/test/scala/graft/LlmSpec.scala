@@ -1028,16 +1028,19 @@ class LlmSpec extends AnyFunSuite {
 
   test("q259 int-symbol BPE ≡ char-form BPE on rounds 1-8; int form runs past the char cap") {
     import spark.implicits._
-    // the q251 chaining corpus: the int form must reproduce the char
-    // form's merges exactly — minting ids instead of placeholder chars
-    // changes the representation, never the answer
+    // the q251 chaining corpus: the int form must reproduce the
+    // sequential reference's merges exactly — minting ids instead of
+    // symbol strings changes the representation, never the answer
     val text = (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    assert(rows(intTable(docs, 3)) == rows(llm.TextOps.bpeTrainFrom(docs, 3)))
-    // ...and on the live corpus over the char form's whole k range
-    assert(rows(intTable(graft.Tables.documents(spark, SparkTestSession.sf), 8)) ==
-      rows(llm.TextOps.q251BpeTrain(spark, SparkTestSession.sf)))
+    assert(rows(intTable(docs, 3)) == BpeReference.train(docs, 3))
+    // ...and on the live corpus over the char-form oracle's whole k
+    // range; q251 (the k=16 memo's first 8 rows) equals a k=8 run
+    val live = graft.Tables.documents(spark, SparkTestSession.sf)
+    val live8 = rows(intTable(live, 8))
+    assert(live8 == BpeReference.train(live, 8))
+    assert(live8 == rows(llm.TextOps.q251BpeTrain(spark, SparkTestSession.sf)))
     // past the cap: rounds 9..16 exist, stay monotone, and keep
     // compressing — the representation was the only limit
     val live16 = rows(llm.TextOps.q259BpeTrain16(spark, SparkTestSession.sf))
@@ -1132,7 +1135,7 @@ class LlmSpec extends AnyFunSuite {
     // argmax here or the table diverges from sequential
     val inter = Seq((1L, (Seq.fill(5)("aab") ++ Seq.fill(5)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(rows(intTable(inter, 3)) == rows(llm.TextOps.bpeTrainFrom(inter, 3)),
+    assert(rows(intTable(inter, 3)) == BpeReference.train(inter, 3),
       "interaction corpus: batched must fall back to the sequential order")
     // self-pair corpus (ADVICE r18): (a,a) at 20 is the argmax, (c,d)
     // at 9 is symbol-disjoint — but merging (a,a)→X mints (X,a) at 10,
@@ -1140,18 +1143,18 @@ class LlmSpec extends AnyFunSuite {
     // excludes accepted rows, so only the self-pair floor catches this.
     val selfp = Seq((1L, (Seq.fill(10)("aaa") ++ Seq.fill(9)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(rows(intTable(selfp, 3)) == rows(llm.TextOps.bpeTrainFrom(selfp, 3)),
+    assert(rows(intTable(selfp, 3)) == BpeReference.train(selfp, 3),
       "self-pair corpus: batched must not batch past a self-pair whose " +
         "minted pair outranks the next disjoint candidate")
     // self-pair where batching IS safe: the next candidate strictly
     // dominates the self-pair's own count, so no minted pair can rival
     val selfOk = Seq((1L, (Seq.fill(4)("aaa") ++ Seq.fill(20)("cd"))
       .mkString(" "))).toDF("doc_id", "text")
-    assert(rows(intTable(selfOk, 2)) == rows(llm.TextOps.bpeTrainFrom(selfOk, 2)))
+    assert(rows(intTable(selfOk, 2)) == BpeReference.train(selfOk, 2))
     // chaining corpus (the q251 construction)
     val chain = Seq((1L, (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" "))).toDF("doc_id", "text")
-    assert(rows(intTable(chain, 4)) == rows(llm.TextOps.bpeTrainFrom(chain, 4)))
+    assert(rows(intTable(chain, 4)) == BpeReference.train(chain, 4))
     // live corpus: the k=64 memo's first 16 merges are q259's k=16
     // table — the two runs batch differently near merge 16 (k=16 caps
     // its last batch), so the prefix is a real check
@@ -1174,8 +1177,7 @@ class LlmSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val (bz, zipfVocab, rz) = llm.TextOps.bpeTrainInt(zipf, 4)
     graft.Ckpt.free(zipfVocab)
-    assert(rows(llm.TextOps.bpeMergeRows(spark, bz)) ==
-      rows(llm.TextOps.bpeTrainFrom(zipf, 4)))
+    assert(rows(llm.TextOps.bpeMergeRows(spark, bz)) == BpeReference.train(zipf, 4))
     assert(rz == 1, s"disjoint distinct-count census must batch fully: $rz")
   }
 
@@ -1326,14 +1328,18 @@ class LlmSpec extends AnyFunSuite {
     val text = (Seq.fill(8)("abcd") ++ Seq.fill(5)("abce") ++
       Seq.fill(3)("xy")).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    val m = llm.TextOps.bpeTrainFrom(docs, k = 3).collect()
-      .map(r => r.getAs[Int]("round") ->
-        (r.getAs[String]("left_sym"), r.getAs[String]("right_sym"),
-          r.getAs[String]("merged"), r.getAs[Long]("pair_count"),
-          r.getAs[Long]("corpus_syms"))).toMap
+    val m = rows(intTable(docs, 3))
+      .map { case (round, l, r, merged, cnt, syms) => round -> ((l, r, merged, cnt, syms)) }
+      .toMap
     assert(m(1) == (("a", "b", "ab", 13L, 45L)), s"round1: ${m(1)}")
     assert(m(2) == (("ab", "c", "abc", 13L, 32L)), s"round2 must chain: ${m(2)}")
     assert(m(3) == (("abc", "d", "abcd", 8L, 24L)), s"round3: ${m(3)}")
+    // q251 trains on every document, its char-form oracle only on those
+    // free of the placeholders chr(1)..chr(8): the grade assumes none
+    val withPh = graft.Tables.documents(spark, SparkTestSession.sf)
+      .filter((1 to 8).map(j => col("text").contains(j.toChar.toString)).reduce(_ || _))
+      .count()
+    assert(withPh == 0, s"$withPh test documents hold a placeholder character")
     // live corpus: rounds 1–2 agree with q182's rank-1 rows; counts
     // non-increasing; symbol totals strictly decreasing with each
     // round's decrement bounded by its pair count (non-overlapping
