@@ -12,9 +12,9 @@ import graft.model._
   * Scale: every operator is keyed by plan/project and expressed as
   * joins + aggregations — a queue of 10⁹ plans partitions across the
   * cluster; nothing collects to the driver. The dependency detector
-  * (S5) explodes per-phase file lists and self-joins on file — at
-  * 100 TB that join is shuffle-partitioned by file path with AQE skew
-  * handling; hot files (lockfiles etc.) would be salted.
+  * (S5) explodes per-phase file lists and self-joins on (project,
+  * file) — at 100 TB that join is shuffle-partitioned by file path with
+  * AQE skew handling; hot files (lockfiles etc.) would be salted.
   */
 object QueueOps {
 
@@ -39,18 +39,20 @@ object QueueOps {
   }
 
   /** S5 — inter-plan dependency detection: plan B depends on earlier
-    * plan A when they touch the same file (ref `agents/orbiter.md:55-66`).
+    * plan A of the same project when they touch the same file (ref
+    * `agents/orbiter.md:55-66`). Plan files are paths relative to the
+    * plan's project, so `src/app.ts` of two projects is two files.
     * Returns (plan_id, depends_on) pairs. */
   def interPlanDeps(plans: Dataset[Plan]): DataFrame = {
     val s = plans.sparkSession
     import s.implicits._
     val files = plans
-      .select($"id", $"createdAt", explode($"phases").as("ph"))
-      .select($"id", $"createdAt", explode($"ph.files").as("file"))
+      .select($"id", $"project", $"createdAt", explode($"phases").as("ph"))
+      .select($"id", $"project", $"createdAt", explode($"ph.files").as("file"))
       .distinct()
-    val a = files.select($"id", $"createdAt", $"file")
-    val b = files.select($"id".as("id2"), $"createdAt".as("created2"), $"file".as("file2"))
-    a.join(b, $"file" === $"file2" &&
+    val b = files.select($"id".as("id2"), $"project".as("project2"),
+      $"createdAt".as("created2"), $"file".as("file2"))
+    files.join(b, $"project" === $"project2" && $"file" === $"file2" &&
         ($"created2" < $"createdAt" ||
          ($"created2" === $"createdAt" && $"id2" < $"id")))
       .select($"id".as("plan_id"), $"id2".as("depends_on"))

@@ -19,6 +19,24 @@ class QueueSpec extends AnyFunSuite {
     assert(deps.forall { case (a, b) => a != b })
   }
 
+  test("S5 deps: plans of two projects touching one relative path are independent") {
+    import spark.implicits._
+    def plan(id: String, project: String, at: String, status: String) =
+      model.Plan(id, project, "feature", status, "background", Timestamp.valueOf(at), None,
+        Seq(model.Phase(1, "Wire app", Seq("src/app.ts"), "Low", "light", Nil)))
+    val plans = Seq(
+      plan("a-1", "alpha", "2026-01-05 09:00:00", "active"),
+      plan("b-1", "beta", "2026-01-05 10:00:00", "queued"),
+      plan("a-2", "alpha", "2026-01-05 11:00:00", "queued")).toDS()
+    val deps = QueueOps.interPlanDeps(plans).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    // only the later alpha plan depends on the earlier one
+    assert(deps == Set(("a-2", "a-1")), s"deps: $deps")
+    val elig = QueueOps.eligible(plans, QueueOps.interPlanDeps(plans))
+      .select("id").collect().map(_.getString(0)).toSet
+    assert(elig == Set("b-1"), s"eligible: $elig")
+  }
+
   test("S6 eligibility: queued plans with incomplete deps are excluded") {
     val plans = Fixtures.plans(spark)
     val deps = QueueOps.interPlanDeps(plans)
@@ -245,6 +263,147 @@ class QueueSpec extends AnyFunSuite {
     val c2 = counts()
     assert((c2._1 - c1._1, c2._2 - c1._2, builds()) == ((1L, 0L, b0 + 1)), s"$c1 -> $c2")
   }
+
+  /** A tiny derived queue for q42: orders are (order, custkey,
+    * o_orderstatus, o_orderpriority, o_orderdate), so plan `o` belongs
+    * to `proj_<custkey % 5>`; lines are (order, line, part = file). */
+  private def writeQueueOrders(dir: String, orders: Seq[(Long, Long, String, String, String)]): Unit = {
+    import spark.implicits._
+    orders.map { case (o, c, st, pr, d) => (o, c, st, pr, java.sql.Date.valueOf(d)) }
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority", "o_orderdate")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+  }
+
+  private def writeQueueLines(dir: String, lines: Seq[(Long, Int, Long)]): Unit = {
+    import spark.implicits._
+    lines.toDF("l_orderkey", "l_linenumber", "l_partkey")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+  }
+
+  private def pickOf(dir: String): Seq[(Long, String, String, Int)] =
+    queue.Derived.q42SchedulerPick(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSeq
+
+  private def pickCounts(): (Long, Long, Long) =
+    SessionCache.countsSnapshot.getOrElse("scheduler_pick", (0L, 0L, 0L))
+
+  // plan 1 (proj_1, active, refactor) blocks plan 2 (proj_1, queued,
+  // bug) on file 10; plan 3 (proj_2, queued, chore) touches file 10 of
+  // its own project, so only plan 3 is eligible
+  private val pickOrders = Seq(
+    (1L, 1L, "P", "3-MEDIUM", "1999-12-20"),
+    (2L, 6L, "O", "1-URGENT", "1999-12-21"),
+    (3L, 2L, "O", "4-NOT SPECIFIED", "1999-12-22"))
+  private val pickLines = Seq((1L, 1, 10L), (2L, 1, 10L), (2L, 2, 30L), (3L, 1, 10L))
+
+  test("q42 picks the plan a rewritten orders table unblocks") {
+    val dir = java.nio.file.Files.createTempDirectory("pick_orders").toString
+    writeQueueOrders(dir, pickOrders)
+    writeQueueLines(dir, pickLines)
+    // chore 4, waited 10 days -1
+    assert(pickOf(dir) == Seq((3L, "proj_2", "chore", 3)))
+    val c0 = pickCounts()
+    assert(pickOf(dir) == Seq((3L, "proj_2", "chore", 3)))
+    val c1 = pickCounts()
+    assert((c1._1 - c0._1, c1._2 - c0._2) == ((1L, 0L)), s"an unchanged queue rebuilt: $c0 -> $c1")
+    // plan 1 completes: the bug plan is eligible and outranks the chore
+    writeQueueOrders(dir, pickOrders.map(o => if (o._1 == 1L) o.copy(_3 = "F") else o))
+    assert(pickOf(dir) == Seq((2L, "proj_1", "bug", 1)))
+    val c2 = pickCounts()
+    assert((c2._2 - c1._2, c2._3 - c1._3) == ((1L, 1L)), s"$c1 -> $c2")
+  }
+
+  test("q42 picks the plan a rewritten lineitem table unblocks") {
+    val dir = java.nio.file.Files.createTempDirectory("pick_lines").toString
+    writeQueueOrders(dir, pickOrders)
+    writeQueueLines(dir, pickLines)
+    assert(pickOf(dir) == Seq((3L, "proj_2", "chore", 3)))
+    val c0 = pickCounts()
+    // plan 2 moves its file-10 phase to file 20: it shares no file with plan 1
+    writeQueueLines(dir, pickLines.map(l => if (l == ((2L, 1, 10L))) (2L, 1, 20L) else l))
+    assert(pickOf(dir) == Seq((2L, "proj_1", "bug", 1)))
+    val c1 = pickCounts()
+    assert((c1._2 - c0._2, c1._3 - c0._3) == ((1L, 1L)), s"$c0 -> $c1")
+  }
+
+  test("concurrent first q42 calls build one pick; a hit plans a local scan only") {
+    val dir = java.nio.file.Files.createTempDirectory("pick_once").toString
+    writeQueueOrders(dir, pickOrders)
+    writeQueueLines(dir, pickLines)
+    def builds() = SessionCache.paysSnapshot.count(_._1 == "scheduler_pick")
+    val (b0, c0) = (builds(), pickCounts())
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Seq[(Long, String, String, Int)]]]()
+    val threads = (1 to 4).map { _ =>
+      new Thread(() => {
+        go.await()
+        got.add(try Right(pickOf(dir)) catch { case e: Throwable => Left(e) })
+      })
+    }
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    assert(got.toArray.toSeq == Seq.fill(4)(Right(Seq((3L, "proj_2", "chore", 3)))), s"results: $got")
+    assert(builds() == b0 + 1, "concurrent first calls must share one build")
+    val c1 = pickCounts()
+    assert((c1._1 - c0._1, c1._2 - c0._2) == ((3L, 1L)), s"$c0 -> $c1")
+    // a request scoped to a project, as a daemon asks, is served from
+    // the driver's rows: a local table scan, no exchange, no Spark job
+    val hit = queue.Derived.q42SchedulerPick(spark, dir).filter(col("project") === "proj_2")
+    val plan = hit.queryExecution.executedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], plan.treeString)
+    assert(hit.collect().length == 1 && builds() == b0 + 1)
+  }
+
+  test("the scheduler pick's input version covers every file its build reads") {
+    def path(uri: String) = new java.net.URI(uri).getPath
+    val read = queue.Derived.schedulerRanked(spark, sf).inputFiles.map(path).toSet
+    val versioned = Tables.version(spark, sf, queue.Derived.statusTables: _*).map(v => path(v._1)).toSet
+    assert(read.nonEmpty && read.subsetOf(versioned), s"unversioned inputs: ${read -- versioned}")
+    for (t <- queue.Derived.statusTables)
+      assert(read.exists(_.contains(s"/$t.parquet")), s"$t is versioned but never read")
+  }
+
+  /** Property: on seeded random queues the one-pass ranked eligible set
+    * and the top-1 equal the multi-frame reference's. Each queue has
+    * every status, `created_at` ties, a file (part key) that plans of
+    * two projects both touch, duplicate phase numbers and a queued plan
+    * with no lines. */
+  test("q42 property: one-pass ranked set and pick equal the reference on random queues") {
+    val rnd = new scala.util.Random(7)
+    val dir = java.nio.file.Files.createTempDirectory("pick_property").toString
+    val days = Seq("1999-12-20", "1999-12-30", "1999-12-30", "1999-12-31")
+    val prios = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("project"), r.getAs[String]("plan_type"),
+        r.getAs[java.sql.Date]("created_at"), r.getAs[Number]("n_phases").longValue,
+        r.getAs[Boolean]("unblocks"), r.getAs[Int]("priority"))).toSet
+    var (sawEligible, sawBlocked) = (false, false)
+    (1 to 6).foreach { round =>
+      val n = 6 + rnd.nextInt(7)
+      val orders = (1 to n).map { o =>
+        val status = if (o <= 3) Seq("O", "P", "F")(o - 1) else Seq("O", "O", "P", "F")(rnd.nextInt(4))
+        (o.toLong, rnd.nextInt(10).toLong, status, prios(rnd.nextInt(5)), days(rnd.nextInt(4)))
+      } :+ ((n + 1).toLong, 3L, "O", "2-HIGH", "1999-12-30") // queued, no lines
+      val lines = (1 to n).flatMap { o =>
+        (1 to rnd.nextInt(8)).flatMap { ln =>
+          val l = (o.toLong, ln, 1L + rnd.nextInt(4))
+          if (rnd.nextInt(6) == 0) Seq(l, (o.toLong, ln, 1L + rnd.nextInt(4))) else Seq(l)
+        }
+      } ++ Seq((1L, 9, 1L), (2L, 9, 1L)) // file 1 in plan 1's and plan 2's projects
+      // plans 1 and 2 are in different projects
+      val fixed = orders.map(o => if (o._1 == 2L) o.copy(_2 = (orders.head._2 + 1) % 10) else o)
+      writeQueueOrders(dir, fixed)
+      writeQueueLines(dir, lines)
+      val want = ranked(queue.SchedulerReference.ranked(spark, dir))
+      assert(ranked(queue.Derived.schedulerRanked(spark, dir)) == want, s"round $round")
+      val wantPick = queue.SchedulerReference.pick(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSeq
+      assert(pickOf(dir) == wantPick, s"round $round")
+      assert(!want.exists(_._1 == n + 1), "a plan with no lines has no phase count")
+      sawEligible ||= want.nonEmpty
+      sawBlocked ||= want.size < fixed.count(_._3 == "O") - 1
+    }
+    assert(sawEligible && sawBlocked, "the random queues never exercised eligibility")
+  }
 }
 
 class StratifySpec extends AnyFunSuite {
@@ -381,11 +540,10 @@ class StratifySpec extends AnyFunSuite {
   }
 
   test("q42 min/max-aggregation dependency sets equal the pair-join replay") {
-    // The round-6 q42 rewrite replaced the (project, file) candidate
-    // pair self-join with per-group min/max struct aggregations. The
-    // driver oracle only hashes the single winning row, so replay the
-    // original pair semantics here and compare the FULL unmet and
-    // depended-upon id sets.
+    // q42 replaces the (project, file) candidate pair self-join with
+    // per-group min/max struct bounds. The driver oracle only hashes the
+    // single winning row, so replay the pair semantics here and compare
+    // the FULL unmet and depended-upon id sets of the engine's frame.
     import org.apache.spark.sql.functions._
     val sf = SparkTestSession.sf
     val p = queue.Derived.plans(spark, sf)
@@ -407,22 +565,16 @@ class StratifySpec extends AnyFunSuite {
       .select("id").distinct().collect().map(_.getLong(0)).toSet
     val dependedPairs = pairs.select("id2").distinct()
       .collect().map(_.getLong(0)).toSet
-    // aggregation-form recomputation (mirrors q42's internals)
-    val open = pf.filter(col("status") =!= "completed")
-    val minOpen = open.groupBy(col("project"), col("file"))
-      .agg(min(struct(col("created_at"), col("id"))).as("m"))
-    val unmetAgg = queued.join(minOpen, Seq("project", "file"))
-      .filter(col("m") < struct(col("created_at"), col("id")))
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-    val maxQ = queued.groupBy(col("project"), col("file"))
-      .agg(max(struct(col("created_at"), col("id"))).as("mx"))
-    val dependedAgg = open.join(maxQ, Seq("project", "file"))
-      .filter(struct(col("created_at"), col("id")) < col("mx"))
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
+    // the engine's one-pass per-plan frame
+    val flags = queue.Derived.schedulerPlans(spark, sf)
+    val unmetAgg = flags.filter(col("status") === "queued" && col("unmet"))
+      .select("id").collect().map(_.getLong(0)).toSet
+    val dependedAgg = flags.filter(col("status") =!= "completed" && col("unblocks"))
+      .select("id").collect().map(_.getLong(0)).toSet
     assert(unmetAgg == unmetPairs, "unmet-dependency sets diverge")
-    // pair form counts targets of ANY status; the aggregation form
-    // restricts to open targets, which is the subset the priority flag
-    // can actually consult (it joins against queued plans only)
+    // pair form counts targets of ANY status; the engine's flag is
+    // compared on open targets, which is the subset the priority flag
+    // can actually consult (it reads queued plans only)
     val dependedOpenPairs = pairs.filter(col("status2") =!= "completed")
       .select("id2").distinct().collect().map(_.getLong(0)).toSet
     assert(dependedAgg == dependedOpenPairs, "depended-upon sets diverge")
